@@ -8,6 +8,7 @@ the JDBC target so the sink + DDL path runs against a real database.
 
 from __future__ import annotations
 
+import contextlib
 import json
 import threading
 from decimal import Decimal
@@ -15,12 +16,15 @@ from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 from urllib.parse import parse_qs, urlparse
 
 import pytest
+from pyspark.sql import types as T
 
 from zylyty_data_engineer_challenge_spark.pipeline import PipelineConfig, run_pipeline
 from zylyty_data_engineer_challenge_spark.schemas import ACCOUNTS, CLIENTS
 from zylyty_data_engineer_challenge_spark.sinks import jdbc as jdbc_sink
+from zylyty_data_engineer_challenge_spark.sources import rest_pages
 from zylyty_data_engineer_challenge_spark.sources.http_csv import fetch_csv
 from zylyty_data_engineer_challenge_spark.sources.rest_pages import (
+    HAS_DATASOURCE_API,
     read_transactions,
     read_transactions_fallback,
 )
@@ -36,6 +40,17 @@ CLIENTS_CSV = (
     "c1,Alice,alice@x.com,1990-01-01\n"
     "c2,Bob,bob@x.com,1985-05-05\n"
 )
+# an all-empty column (score, born), a missing trailing field (row 2) and
+# an empty string cell (row 3's name)
+EDGE_CSV = "id,name,score,born\n1,a,,\n2,b\n3,,,\n"
+EDGE = T.StructType(
+    [
+        T.StructField("id", T.LongType(), True),
+        T.StructField("name", T.StringType(), True),
+        T.StructField("score", T.DoubleType(), True),
+        T.StructField("born", T.DateType(), True),
+    ]
+)
 
 
 def _tx(i: int) -> dict:
@@ -50,7 +65,9 @@ def _tx(i: int) -> dict:
 
 
 class _ApiHandler(BaseHTTPRequestHandler):
+    n_tx = N_TX
     flaky_failures = {"1": 1}  # page 1 fails once, then succeeds
+    tx_requests: list = []  # (page, status) of every /transactions request
 
     def log_message(self, *a):  # silence
         pass
@@ -71,6 +88,10 @@ class _ApiHandler(BaseHTTPRequestHandler):
             self._send(200, ACCOUNTS_CSV.encode(), "text/csv")
         elif url.path == "/download/clients.csv":
             self._send(200, CLIENTS_CSV.encode(), "text/csv")
+        elif url.path == "/download/edge.csv":
+            self._send(200, EDGE_CSV.encode(), "text/csv")
+        elif url.path == "/download/header_only.csv":
+            self._send(200, EDGE_CSV.split("\n")[0].encode() + b"\n", "text/csv")
         elif url.path == "/download/broken.csv":
             self._send(500, b"boom", "text/plain")
         elif url.path == "/transactions":
@@ -79,10 +100,12 @@ class _ApiHandler(BaseHTTPRequestHandler):
             limit = int(q.get("limit", ["100"])[0])
             if self.flaky_failures.get(page, 0) > 0:
                 self.flaky_failures[page] -= 1
+                self.tx_requests.append((int(page), 503))
                 self._send(503, b'{"error": "try again"}')
                 return
+            self.tx_requests.append((int(page), 200))
             start = int(page) * limit
-            records = [_tx(i) for i in range(start, min(start + limit, N_TX))]
+            records = [_tx(i) for i in range(start, min(start + limit, self.n_tx))]
             if int(page) % 2 == 0:  # S4: alternate envelope and bare array
                 body = json.dumps({"results": records})
             else:
@@ -92,13 +115,20 @@ class _ApiHandler(BaseHTTPRequestHandler):
             self._send(404, b"{}")
 
 
+@contextlib.contextmanager
+def _serve(handler):
+    server = ThreadingHTTPServer(("127.0.0.1", 0), handler)
+    threading.Thread(target=server.serve_forever, daemon=True).start()
+    try:
+        yield f"http://127.0.0.1:{server.server_address[1]}"
+    finally:
+        server.shutdown()
+
+
 @pytest.fixture(scope="module")
 def api_server():
-    server = ThreadingHTTPServer(("127.0.0.1", 0), _ApiHandler)
-    t = threading.Thread(target=server.serve_forever, daemon=True)
-    t.start()
-    yield f"http://127.0.0.1:{server.server_address[1]}"
-    server.shutdown()
+    with _serve(_ApiHandler) as url:
+        yield url
 
 
 @pytest.fixture(scope="module")
@@ -134,6 +164,31 @@ def test_fetch_csv_bad_token_yields_empty(spark, api_server):
     assert df.count() == 0
 
 
+def test_fetch_csv_arrow_path_edge_cells(spark, api_server):
+    """The raw frame goes through Arrow: with the non-Arrow fallback off, an
+    Arrow failure would surface as fetch_csv's empty frame, not as rows.
+    Empty and missing cells become NULLs of the schema's types."""
+    key = "spark.sql.execution.arrow.pyspark.fallback.enabled"
+    before = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try:
+        df = fetch_csv(spark, api_server, "edge", TOKEN, EDGE)
+        rows = sorted(df.collect(), key=lambda r: r.id)
+        header_only = fetch_csv(spark, api_server, "header_only", TOKEN, EDGE)
+        assert header_only.count() == 0
+    finally:
+        spark.conf.set(key, before)
+    assert [tuple(r) for r in rows] == [
+        (1, "a", None, None),
+        (2, "b", None, None),
+        (3, "", None, None),
+    ]
+    for frame in (df, header_only):
+        assert [(f.name, f.dataType) for f in frame.schema] == [
+            (f.name, f.dataType) for f in EDGE
+        ]
+
+
 # ---------------------------------------------------------------------------
 # S3/S4 — both the partitioned data source and the fallback loop
 # ---------------------------------------------------------------------------
@@ -155,11 +210,44 @@ def test_rest_pages_reads_all(spark, api_server, reader):
 
 
 def test_rest_pages_partitioned_parallelism(spark, api_server):
-    df = read_transactions(
-        spark, api_server, TOKEN, limit=PAGE_LIMIT, max_pages=10, pages_per_partition=2
-    )
-    assert df.rdd.getNumPartitions() > 1
+    df = read_transactions(spark, api_server, TOKEN, limit=PAGE_LIMIT, max_pages=10)
+    assert df.rdd.getNumPartitions() == min(spark.sparkContext.defaultParallelism, 11)
     assert df.count() == N_TX
+
+
+@pytest.mark.parametrize(
+    "n_tx", [2 * PAGE_LIMIT + 30, 3 * PAGE_LIMIT], ids=["short_last_page", "full_last_page"]
+)
+def test_rest_pages_strided_reads(spark, n_tx):
+    """Partition i of k reads pages i, i+k, ... and stops at its first short
+    page: the rows equal the serial loop's, and each partition fetches at
+    most one page past the feed's end. A feed whose last page is full ends
+    on an empty page."""
+    max_pages = 10
+    pages = n_tx // PAGE_LIMIT + 1  # the serial loop's fetches, end page included
+    k = min(spark.sparkContext.defaultParallelism, max_pages + 1)
+
+    class Handler(_ApiHandler):
+        flaky_failures = {"1": 1}
+        tx_requests = []
+
+    Handler.n_tx = n_tx
+    with _serve(Handler) as url:
+        df = read_transactions(spark, url, TOKEN, limit=PAGE_LIMIT, max_pages=max_pages)
+        assert df.rdd.getNumPartitions() == k
+        got = sorted(df.collect(), key=lambda r: r._arrival)
+        seen = list(Handler.tx_requests)
+        want = sorted(
+            read_transactions_fallback(spark, url, TOKEN, limit=PAGE_LIMIT, max_pages=max_pages)
+            .collect(),
+            key=lambda r: r._arrival,
+        )
+    assert [tuple(r) for r in got] == [tuple(r) for r in want]
+    assert len(got) == n_tx and [r._arrival for r in got] == list(range(n_tx))
+    # every partition but the end page's fetches one page past it (k - 1
+    # requests); the flaky page's retry is one more
+    assert len(seen) <= pages + k
+    assert seen.count((1, 503)) == 1 and (1, 200) in seen
 
 
 # ---------------------------------------------------------------------------
@@ -321,10 +409,13 @@ def test_pipeline_registers_engine_native_views(spark, api_server, derby_url):
 
 
 class _Always400Handler(BaseHTTPRequestHandler):
+    requests: list = []
+
     def log_message(self, *a):
         pass
 
     def do_GET(self):  # noqa: N802
+        self.requests.append(self.path)
         body = b'{"error": "bad request"}'
         self.send_response(400)
         self.send_header("Content-Type", "application/json")
@@ -335,23 +426,28 @@ class _Always400Handler(BaseHTTPRequestHandler):
 
 @pytest.fixture()
 def bad_request_server():
-    server = ThreadingHTTPServer(("127.0.0.1", 0), _Always400Handler)
-    t = threading.Thread(target=server.serve_forever, daemon=True)
-    t.start()
-    yield f"http://127.0.0.1:{server.server_address[1]}"
-    server.shutdown()
+    _Always400Handler.requests = []
+    with _serve(_Always400Handler) as url:
+        yield url
 
 
-def test_page0_400_raises_after_bounded_retries(bad_request_server):
+def test_page0_400_raises_after_bounded_retries(bad_request_server, monkeypatch):
     # a 400 on the FIRST page is a malformed request, not end-of-data —
-    # silently returning an empty dataset would mask a broken integration
-    from zylyty_data_engineer_challenge_spark.sources.rest_pages import _fetch_page
-
-    with pytest.raises(RuntimeError, match="page 0 failed"):
-        _fetch_page(bad_request_server, TOKEN, 0, 100, timeout=2.0, max_retries=1)
+    # silently returning an empty dataset would mask a broken integration.
+    # max_retries=2 means 3 attempts with a sleep between each, none after
+    sleeps = []
+    monkeypatch.setattr(rest_pages.time, "sleep", sleeps.append)
+    with pytest.raises(RuntimeError, match="page 0 failed after 3 attempts"):
+        rest_pages._fetch_page(bad_request_server, TOKEN, 0, 100, timeout=2.0, max_retries=2)
+    assert sleeps == [rest_pages.RETRY_SLEEP] * 2
+    assert len(_Always400Handler.requests) == 3
 
 
 def test_past_end_400_is_end_of_data(bad_request_server):
     from zylyty_data_engineer_challenge_spark.sources.rest_pages import _fetch_page
 
     assert _fetch_page(bad_request_server, TOKEN, 3, 100, timeout=2.0, max_retries=1) == []
+
+
+def test_pipeline_use_datasource_defaults_to_api_availability():
+    assert PipelineConfig().use_datasource is HAS_DATASOURCE_API

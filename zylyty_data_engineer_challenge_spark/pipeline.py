@@ -28,7 +28,11 @@ from .etl.clean import clean_transactions
 from .schemas import ACCOUNTS, CLIENTS
 from .sinks import jdbc as jdbc_sink
 from .sources.http_csv import fetch_csv
-from .sources.rest_pages import read_transactions, read_transactions_fallback
+from .sources.rest_pages import (
+    HAS_DATASOURCE_API,
+    read_transactions,
+    read_transactions_fallback,
+)
 
 COMPLETION_FMT = "ZYLYTY Data Import Completed [{clients}, {accounts}, {transactions}]"
 
@@ -46,7 +50,7 @@ class PipelineConfig:
     db_name: str = field(default_factory=lambda: os.environ.get("DB_NAME", ""))
     jdbc_url: str | None = None  # overrides db_* when set (tests, non-PG targets)
     push_views: bool = True
-    use_datasource: bool = True  # partitioned REST source vs driver loop
+    use_datasource: bool = HAS_DATASOURCE_API  # partitioned REST source vs driver loop
 
     def url(self) -> str:
         if self.jdbc_url:

@@ -8,13 +8,14 @@ Reference semantics preserved exactly:
   — the pipeline loads what it can (main.py:71-73, SURVEY.md §8.4).
 
 Spark-first shape: the body (already driver-resident — it came over one
-HTTP response) is CSV-parsed driver-side and becomes a typed DataFrame via
-``createDataFrame`` + JVM-side casts to the declared schema. No temp files:
-a driver-local spool path would break on a real cluster (executors cannot
-read the driver's /tmp). Feeds too large for one driver-held response
-belong in object storage + ``spark.read.csv`` — that is a different
-source, not this one (the reference's feed is a single bounded download,
-main.py:62-69).
+HTTP response) is CSV-parsed driver-side into an object-dtype pandas frame,
+which Arrow hands to the JVM (a list of tuples would be pickled through a
+Python worker on every action), then cast JVM-side to the declared schema.
+No temp files: a driver-local spool path would break on a real cluster
+(executors cannot read the driver's /tmp). Feeds too large for one
+driver-held response belong in object storage + ``spark.read.csv`` — that
+is a different source, not this one (the reference's feed is a single
+bounded download, main.py:62-69).
 """
 
 from __future__ import annotations
@@ -22,6 +23,7 @@ from __future__ import annotations
 import csv
 import io
 
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -69,7 +71,7 @@ def fetch_csv(
         names = [f.name for f in schema.fields]
         raw_schema = T.StructType([T.StructField(n, T.StringType(), True) for n in names])
         rows = [tuple(rec.get(n) for n in names) for rec in reader]
-        raw = spark.createDataFrame(rows, raw_schema)
+        raw = spark.createDataFrame(pd.DataFrame(rows, columns=names, dtype=object), raw_schema)
         # JVM-side casts to the declared types (PERMISSIVE: bad cells -> NULL)
         return raw.select(
             *[F.col(f.name).cast(f.dataType).alias(f.name) for f in schema.fields]

@@ -13,12 +13,14 @@ Reference semantics:
   per SURVEY.md §2.1's recommendation.
 
 Spark-first shape: a **PySpark Python Data Source** (Spark 4.x,
-``pyspark.sql.datasource``) whose ``partitions()`` enumerates page ranges —
-so a 1000-executor cluster fetches pages in parallel and the rows never
-pass through the driver. Each row carries ``_arrival = page*limit + idx``,
-the stable cross-partition arrival ordinal that keep-first dedup (T3)
-needs (SURVEY.md §7 risk 1). A serial driver-side fallback with identical
-semantics covers environments without the data source API.
+``pyspark.sql.datasource``) with one partition per parallelism slot;
+partition ``i`` of ``k`` reads pages ``i, i+k, ...`` — so a cluster
+fetches pages in parallel, a short feed costs only ``k`` tasks, and the
+rows never pass through the driver. Each row carries
+``_arrival = page*limit + idx``, the stable cross-partition arrival
+ordinal that keep-first dedup (T3) needs (SURVEY.md §7 risk 1). A serial
+driver-side fallback with identical semantics covers environments without
+the data source API.
 """
 
 from __future__ import annotations
@@ -47,7 +49,6 @@ DEFAULT_MAX_PAGES = 300  # main.py:96 (inclusive bound => 301 pages)
 DEFAULT_TIMEOUT = 10.0  # main.py:104
 RETRY_SLEEP = 2.0  # main.py:115
 DEFAULT_MAX_RETRIES = 5  # bounded, unlike the reference
-PAGES_PER_PARTITION = 8
 
 
 def _parse_ts(v) -> dt.datetime | None:
@@ -78,12 +79,15 @@ def _unwrap(payload) -> list[dict]:
 def _fetch_page(
     base_url: str, token: str, page: int, limit: int, timeout: float, max_retries: int
 ) -> list[dict]:
-    """One page with bounded same-page retry (2 s backoff, like the
-    reference but finite). Raises after ``max_retries`` failures."""
+    """One page with bounded same-page retry (2 s between attempts, like
+    the reference but finite). Raises after ``max_retries + 1`` failed
+    attempts, without sleeping after the last one."""
     import requests
 
     last_err: Exception | None = None
-    for _ in range(max_retries + 1):
+    for attempt in range(max_retries + 1):
+        if attempt:
+            time.sleep(RETRY_SLEEP)
         try:
             resp = requests.get(
                 f"{base_url}/transactions",
@@ -105,8 +109,7 @@ def _fetch_page(
             return _unwrap(resp.json())
         except Exception as e:  # requests.RequestException + JSON errors
             last_err = e
-            time.sleep(RETRY_SLEEP)
-    raise RuntimeError(f"page {page} failed after {max_retries} retries") from last_err
+    raise RuntimeError(f"page {page} failed after {max_retries + 1} attempts") from last_err
 
 
 def _rows_of(page: int, limit: int, records: Sequence[dict]) -> Iterator[tuple]:
@@ -122,12 +125,6 @@ def _rows_of(page: int, limit: int, records: Sequence[dict]) -> Iterator[tuple]:
         )
 
 
-class PageRange(InputPartition):
-    def __init__(self, start: int, end: int):
-        self.start = start
-        self.end = end  # exclusive
-
-
 class RestPagesReader(DataSourceReader):
     def __init__(self, options: dict):
         self.base_url = options["base_url"]
@@ -136,20 +133,21 @@ class RestPagesReader(DataSourceReader):
         self.max_pages = int(options.get("max_pages", DEFAULT_MAX_PAGES))
         self.timeout = float(options.get("timeout", DEFAULT_TIMEOUT))
         self.max_retries = int(options.get("max_retries", DEFAULT_MAX_RETRIES))
-        self.pages_per_partition = int(
-            options.get("pages_per_partition", PAGES_PER_PARTITION)
-        )
+        # ``n``: the session's parallelism; never more partitions than pages
+        self.k = min(int(options.get("n", 1)), self.max_pages + 1)
 
-    def partitions(self) -> list[PageRange]:
-        total = self.max_pages + 1  # inclusive bound, main.py:101
-        step = self.pages_per_partition
-        return [PageRange(s, min(s + step, total)) for s in range(0, total, step)]
+    def partitions(self) -> list[InputPartition]:
+        return [InputPartition(i) for i in range(self.k)]
 
-    def read(self, partition: PageRange) -> Iterator[tuple]:
-        """Executor-side: fetch this partition's pages serially; a short
-        page (< limit rows) ends the feed, so later pages in this range —
-        and implicitly later partitions — yield nothing extra."""
-        for page in range(partition.start, partition.end):
+    def read(self, partition: InputPartition) -> Iterator[tuple]:
+        """Executor-side: fetch pages ``i, i+k, i+2k, ...`` up to
+        ``max_pages`` (inclusive, main.py:101) serially, stopping at this
+        partition's first short page (< limit rows, main.py:111-112). Every
+        page before the feed's first short page is read by exactly one
+        partition. Each other partition then fetches one page past that
+        short page; if the API returns a full page there, its rows are
+        kept, where the reference's serial loop would have stopped."""
+        for page in range(partition.value, self.max_pages + 1, self.k):
             records = _fetch_page(
                 self.base_url, self.token, page, self.limit, self.timeout, self.max_retries
             )
@@ -182,9 +180,9 @@ def read_transactions(
     token: str,
     limit: int = DEFAULT_LIMIT,
     max_pages: int = DEFAULT_MAX_PAGES,
-    pages_per_partition: int = PAGES_PER_PARTITION,
 ) -> DataFrame:
-    """Partitioned read through the Python Data Source."""
+    """Partitioned read through the Python Data Source: one partition per
+    ``defaultParallelism`` slot, at most one per page."""
     register(spark)
     return (
         spark.read.format("rest_pages")
@@ -192,7 +190,7 @@ def read_transactions(
         .option("token", token)
         .option("limit", limit)
         .option("max_pages", max_pages)
-        .option("pages_per_partition", pages_per_partition)
+        .option("n", spark.sparkContext.defaultParallelism)
         .load()
     )
 
