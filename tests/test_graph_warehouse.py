@@ -4,6 +4,9 @@ oracle gate."""
 
 from __future__ import annotations
 
+import random
+
+import pytest
 from pyspark.sql import functions as F
 
 from zylyty_data_engineer_challenge_spark.operators.graph import connected_components
@@ -12,37 +15,57 @@ from zylyty_data_engineer_challenge_spark.queries.warehouse import q_scd2_dim
 SF_DIR = "/root/testdata/sf0.001"
 
 
-def test_cc_chain_and_singleton(spark):
-    # chain 1-2-3 plus isolated 10: transitivity must label 3 with 1
-    nodes = spark.createDataFrame([(1,), (2,), (3,), (10,)], ["node"])
-    edges = spark.createDataFrame([(1, 2), (2, 3)], ["src", "dst"])
-    got = {
-        r["node"]: r["component"]
-        for r in connected_components(nodes, edges).collect()
-    }
-    assert got == {1: 1, 2: 1, 3: 1, 10: 10}
+def _deep_chain(n=25, seed=7):
+    # an n-node path with shuffled ids, random edge orientation and its
+    # minimum id at one end: min-label propagation needs n rounds, more
+    # than any fixed cap of 20 would allow
+    rng = random.Random(seed)
+    ids = rng.sample(range(1, 1000), n)
+    low = ids.index(min(ids))
+    ids[0], ids[low] = ids[low], ids[0]
+    edges = [(a, b) if rng.random() < 0.5 else (b, a) for a, b in zip(ids, ids[1:])]
+    return ids, edges, {i: ids[0] for i in ids}
 
 
-def test_cc_merges_two_clusters_via_bridge(spark):
-    # two cliques joined by one bridge edge collapse to one component
-    nodes = spark.createDataFrame([(i,) for i in range(1, 7)], ["node"])
-    edges = spark.createDataFrame(
-        [(1, 2), (2, 3), (4, 5), (5, 6), (3, 4)], ["src", "dst"]
-    )
-    comps = {
-        r["component"] for r in connected_components(nodes, edges).collect()
-    }
-    assert comps == {1}
-
-
-def test_cc_direction_independent(spark):
-    # labels must not depend on edge orientation (min flows both ways)
-    nodes = spark.createDataFrame([(5,), (9,)], ["node"])
-    fwd = spark.createDataFrame([(9, 5)], ["src", "dst"])
-    got = {
-        r["node"]: r["component"] for r in connected_components(nodes, fwd).collect()
-    }
-    assert got == {5: 5, 9: 5}
+@pytest.mark.parametrize(
+    "nodes, edges, expected",
+    [
+        # transitivity labels 3 with 1; the isolated 10 keeps its own id
+        pytest.param(
+            [1, 2, 3, 10], [(1, 2), (2, 3)], {1: 1, 2: 1, 3: 1, 10: 10},
+            id="chain_and_singleton",
+        ),
+        # two chains joined by one bridge edge collapse to one component
+        pytest.param(
+            [1, 2, 3, 4, 5, 6],
+            [(1, 2), (2, 3), (4, 5), (5, 6), (3, 4)],
+            {n: 1 for n in range(1, 7)},
+            id="bridge",
+        ),
+        # the min flows against the edge orientation too
+        pytest.param([5, 9], [(9, 5)], {5: 5, 9: 5}, id="direction"),
+        # 99 is not a node: its edges join nothing and it gets no label
+        pytest.param(
+            [1, 2], [(1, 99), (99, 2)], {1: 1, 2: 2}, id="ghost_endpoint"
+        ),
+        pytest.param(
+            [3, 5, 8], [(3, 3), (8, 5)], {3: 3, 5: 5, 8: 5}, id="self_loop"
+        ),
+        pytest.param(
+            [1, 2, 3],
+            [(2, 3), (2, 3), (3, 2), (1, 2)],
+            {1: 1, 2: 1, 3: 1},
+            id="duplicate_edge",
+        ),
+        pytest.param(*_deep_chain(), id="deep_chain"),
+    ],
+)
+def test_cc_labels(spark, nodes, edges, expected):
+    got = connected_components(
+        spark.createDataFrame([(n,) for n in nodes], ["node"]),
+        spark.createDataFrame(edges, "src long, dst long"),
+    ).collect()
+    assert {r["node"]: r["component"] for r in got} == expected
 
 
 def test_scd2_versions_are_contiguous(spark):
@@ -179,51 +202,3 @@ def test_neighbor_jaccard_invariants(spark):
         assert r["n_common"] >= graph.NJ_MIN_COMMON
         # Jaccard <= 1: intersection can never exceed union
         assert r["n_common"] <= r["n_union"]
-
-
-def test_cc_subgraph_mode_matches_default(spark):
-    """r15: spark.zylyty.cc.subgraphLabels=true (the cluster-scale mode —
-    iterate only edge endpoints, attach singletons once) must produce
-    bit-identical labels to the default full-node iteration, including
-    every edge-free singleton, on both a CC consumer and the multimodal
-    union graph (whose diameter exercises the adaptive step batching)."""
-    from zylyty_data_engineer_challenge_spark.operators import graph
-
-    sf = "/root/testdata/sf0.001"
-    default_cc = graph.dedup_cc(spark, sf).collect()
-    default_mm = graph.dedup_multimodal_cc(spark, sf).collect()
-    spark.conf.set("spark.zylyty.cc.subgraphLabels", "true")
-    spark.conf.set("spark.zylyty.cc.stepsPerCycle", "4")
-    try:
-        sub_cc = graph.dedup_cc(spark, sf).collect()
-        sub_mm = graph.dedup_multimodal_cc(spark, sf).collect()
-    finally:
-        spark.conf.unset("spark.zylyty.cc.subgraphLabels")
-        spark.conf.unset("spark.zylyty.cc.stepsPerCycle")
-    assert sub_cc == default_cc
-    assert sub_mm == default_mm
-    # and the singleton contract explicitly: every doc with no pair keeps
-    # its own id in both modes
-    singles = [r for r in default_cc if r["doc_id"] == r["component"]]
-    assert singles, "fixture has no singleton components"
-
-
-def test_cc_auto_switch_matches_default(spark):
-    """r16 (VERDICT r15 item 2): the data-driven auto mode — forced to
-    switch to the endpoint subgraph after cycle 1 by a floor-of-1
-    threshold — must produce bit-identical labels to the full-node
-    iteration on both a shallow CC consumer and the deep multimodal
-    union graph, singletons included."""
-    from zylyty_data_engineer_challenge_spark.operators import graph
-
-    sf = "/root/testdata/sf0.001"
-    default_cc = graph.dedup_cc(spark, sf).collect()
-    default_mm = graph.dedup_multimodal_cc(spark, sf).collect()
-    spark.conf.set("spark.zylyty.cc.subgraphAutoMinNodes", "1")
-    try:
-        auto_cc = graph.dedup_cc(spark, sf).collect()
-        auto_mm = graph.dedup_multimodal_cc(spark, sf).collect()
-    finally:
-        spark.conf.unset("spark.zylyty.cc.subgraphAutoMinNodes")
-    assert auto_cc == default_cc
-    assert auto_mm == default_mm

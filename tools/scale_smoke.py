@@ -602,9 +602,6 @@ def contam_main() -> int:
 # (sf0.1 -> x10 relational corpus), the per-row argmin Lloyd assignment
 # (kmeans_lloyd, x10 -> x100 embeddings), and the gate-restricted funnel
 # histogram (curate_quality_funnel, x10 -> x100 documents).
-# --ccmode: interleaved A/B of the CC iteration modes over the WARM x10
-# pair cache (subgraphLabels false vs true vs auto-forced), the evidence
-# behind the r16 auto-select default.
 
 R16_X100 = ["kmeans_lloyd", "curate_quality_funnel"]
 
@@ -663,44 +660,6 @@ def r16exp_main() -> int:
     return 0
 
 
-def ccmode_main() -> int:
-    import tempfile
-
-    from zylyty_data_engineer_challenge_spark.operators import graph
-
-    spark = get_spark("scale-smoke-ccmode")
-    if "--rebuild" in sys.argv or not (OUT / "documents.parquet").exists():
-        build(spark)
-    root = tempfile.mkdtemp(prefix="zylyty_ccmode_artifacts_")
-    spark.conf.set("spark.zylyty.pairCacheDir", root)
-    # warm the pair cache once so every mode times the CC loop, not
-    # detection
-    graph.dedup_cc(spark, str(OUT)).write.format("noop").mode("overwrite").save()
-    modes = {
-        "full_node": {"spark.zylyty.cc.subgraphLabels": "false"},
-        "subgraph": {"spark.zylyty.cc.subgraphLabels": "true"},
-        "auto_forced": {
-            "spark.zylyty.cc.subgraphLabels": "auto",
-            "spark.zylyty.cc.subgraphAutoMinNodes": "1",
-        },
-    }
-    out: dict[str, list[float]] = {m: [] for m in modes}
-    for rep in range(3):
-        for m, confs in modes.items():
-            for k, v in confs.items():
-                spark.conf.set(k, v)
-            t0 = time.time()
-            graph.dedup_cc(spark, str(OUT)).write.format("noop").mode(
-                "overwrite"
-            ).save()
-            out[m].append(round(time.time() - t0, 2))
-            for k in confs:
-                spark.conf.unset(k)
-            print(f"# rep{rep} {m}: {out[m][-1]}s", file=sys.stderr)
-    print(json.dumps({m: {"best": min(v), "all": v} for m, v in out.items()}))
-    return 0
-
-
 def main() -> int:
     import __spark_entry__ as entry_mod
 
@@ -745,6 +704,4 @@ if __name__ == "__main__":
         raise SystemExit(contam_main())
     if "--r16exp" in sys.argv:
         raise SystemExit(r16exp_main())
-    if "--ccmode" in sys.argv:
-        raise SystemExit(ccmode_main())
     raise SystemExit(x100_main() if "--x100" in sys.argv else main())

@@ -10,19 +10,25 @@ B~C ⟹ keep one of {A,B,C}). Connected components assigns every document
 its cluster id (the minimum doc_id reachable through near-dup edges), from
 which "keep the representative, drop the rest" is a single filter.
 
-Algorithm: iterative **min-label propagation** — each round every node
-takes the minimum label among itself and its neighbors; at the fixpoint
-every node carries the minimum doc_id of its component. The driver loop
-runs Spark jobs (never collects data); per-round lineage is truncated with
-a lazy ``localCheckpoint`` so plan depth stays O(1) instead of O(rounds).
-Convergence is detected with a strictly-decreasing integer invariant
-(``SUM(component)``) — one cheap aggregate per round, exact (no floats).
+Algorithm: iterative **min-label propagation** over the full node table
+— each round every node takes the minimum label among itself and its
+neighbors; at the fixpoint every node carries the minimum doc_id of its
+component. The driver loop runs Spark jobs (never collects data); per-round
+lineage is truncated with a lazy ``localCheckpoint`` so plan depth stays
+O(1) instead of O(rounds). Convergence is detected with a non-increasing
+integer invariant (``SUM(component)``) — one cheap aggregate per round,
+exact (no floats), so the loop stops at the fixpoint after at most
+(component diameter + 1) rounds and never returns stale labels.
 
-Scale: each round is one shuffle (edge join) + one aggregate; rounds =
-component diameter, which for dedup clusters is tiny (near-dup clusters
-are dense — typically 2-4 rounds). This is the standard formulation used
-at web scale; alternating "large-star/small-star" halves round count on
-pathological chains but the join shape is identical.
+Scale: each round is one edge join + one aggregate; near-dup clusters are
+dense, so the consumers here converge in 2-3 rounds (``dedup_cc``,
+``dedup_cc_names``) and 16 for the four-modality union graph at sf0.1.
+Alternating large-star/small-star (Kiveris et al., SoCC 2014) needs fewer
+rounds on deep graphs but costs more per round: measured medians of 3 on
+4 vCPUs, it took 2.86 s (5 rounds) against 4.25 s (16 rounds) on the sf0.1
+multimodal graph, but 1.69 s against 0.83 s on the shallow sf0.1
+``dedup_cc`` graph and 2.75 s against 1.61 s on the 500-doc benchmark
+corpus, so this loop keeps the single formulation.
 
 Cross-engine determinism: the fixpoint (min reachable doc_id) is
 order-independent, so the DuckDB oracle computes the same labels with a
@@ -39,63 +45,17 @@ from ..oracle_utils import strip_order_by as _strip_order_by
 from .dedup import ORACLE_SQL as _DEDUP_ORACLE
 from .dedup import dedup_edit_distance, minhash_pairs_cached
 
-MAX_CC_ROUNDS = 20  # safety bound; convergence is checked every round
-
 
 def connected_components(nodes: DataFrame, edges: DataFrame) -> DataFrame:
     """(node) x (src, dst) -> (node, component) with component = min node
-    id reachable over undirected edges; singletons keep their own id.
+    id reachable over undirected edges; singletons keep their own id and
+    edges touching ids outside ``nodes`` are ignored.
 
-    r15 (optimization) added step batching and the endpoint-subgraph
-    iteration as confs; r16 (VERDICT r15 item 2) makes the subgraph
-    choice DATA-DRIVEN instead of a static conf:
-
-    * STEP BATCHING — ``spark.zylyty.cc.stepsPerCycle`` (default 1,
-      i.e. batching OFF: one propagation step per checkpoint +
-      convergence collect — the pre-r15 loop). Setting 2 runs an
-      adaptive 1-then-2 steps per cycle, halving driver syncs on deep
-      graphs at the price of up to cap-1 overshoot steps after the
-      fixpoint; on the mid-diameter name graph that overshoot measured
-      +0.24 s (cap 2) / +0.6 s (cap 4), so batching stays off locally
-      and is a deployment conf for clusters where one driver sync costs
-      more than one propagation pass. The label sum is monotone
-      non-increasing under each step, so "sum unchanged across a k-step
-      cycle" still implies no step changed a label — the same exact
-      fixpoint test; overshooting the fixpoint mid-cycle only
-      re-propagates already-stable labels. (A path-halving variant —
-      pointer-jump after each step — was measured first: 16 rounds ->
-      only 11 while adding an endpoint-sized self-join per round;
-      rejected.)
-    * ``spark.zylyty.cc.subgraphLabels`` ∈ {auto (default), true,
-      false}: a node with no edge can never change its label, so the
-      loop only NEEDS to iterate the edge-endpoint subgraph, attaching
-      the full node set once after convergence with component = own id
-      — identical fixpoint, with every per-round shuffle and
-      convergence aggregate shrunk from O(corpus) to O(duplicate
-      endpoints). At bench scale the endpoint init + final attach join
-      cost MORE than the tiny full-node rounds save (r15 interleaved
-      A/B: +0.2 s per consumer), so the choice is scale-dependent —
-      and "auto" makes it from the data at ZERO extra cost: the
-      convergence collect already aggregates the label table, so it
-      also returns the label COUNT, and once the first cycle observes
-      >= ``spark.zylyty.cc.subgraphAutoMinNodes`` (default 2,000,000)
-      labels the loop restricts itself to the endpoint set (one
-      semi-join against the edge list) and iterates the subgraph from
-      then on — small graphs keep the exact r14/r15 full-node plan
-      (bench-identical), cluster graphs stop shuffling corpus-sized
-      label tables every round after round 1. "true" skips even round
-      1's full-node pass by initializing labels AT the endpoints
-      (fused groupBy(dst) init + first step), the pure O(endpoints)
-      shape — but it reads endpoint ids from the EDGE list, so it
-      PRECONDITIONS endpoints ⊆ nodes (a ghost endpoint would
-      propagate its id as a component; every caller here satisfies
-      this by construction — pair lists are derived from the node
-      table). "auto"/"false" have no such precondition: labels always
-      start from ``nodes``, and edges touching ids outside it are
-      ignored on both sides, exactly like the pre-r15 loop. The attach
-      join broadcasts the (output-sized) converged label table via
-      ``spark.zylyty.cc.broadcastLabels`` (default true; flip it if
-      the duplicate-endpoint set outgrows executor memory).
+    Each round joins every node's neighbor minimum into the label table,
+    checkpoints it lazily and collects ``SUM(component)``. Labels only
+    decrease, so an unchanged sum means no label changed: the loop stops
+    at that exact fixpoint, after at most (component diameter + 1)
+    rounds. The planner (AQE) chooses every join strategy.
     """
     # checkpoint the symmetrized edge list ONCE: it is joined every round,
     # and without materialization each round would re-execute the entire
@@ -104,109 +64,24 @@ def connected_components(nodes: DataFrame, edges: DataFrame) -> DataFrame:
     sym = edges.union(
         edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     ).localCheckpoint(eager=False)
-    spark = nodes.sparkSession
-    mode = spark.conf.get("spark.zylyty.cc.subgraphLabels", "auto")
-    subgraph = mode == "true"
-    auto_min = int(
-        spark.conf.get("spark.zylyty.cc.subgraphAutoMinNodes", "2000000")
-    )
-    if subgraph:
-        # fused first round: on the symmetric edge list every endpoint
-        # appears as dst, so min(own id, min neighbor id) is ONE
-        # aggregate — endpoint init + first propagation step together
-        labels = (
-            sym.groupBy("dst")
-            .agg(F.min("src").alias("nbr_min"))
-            .select(
-                F.col("dst").alias("node"),
-                F.least(F.col("dst"), F.col("nbr_min")).alias("component"),
-            )
-        )
-    else:
-        labels = nodes.select(F.col("node"), F.col("node").alias("component"))
-
-    # r16: broadcast the two output-sized sides of the per-round joins
-    # (guide §3.1 — the pagerank.broadcastRanks pattern applied to the CC
-    # loop). The edge list is duplicate-pairs-sized and the per-round
-    # neighbor-min table is endpoint-sized, while the label table is
-    # corpus-sized; without the hints the stats-blind loop (checkpoint-
-    # backed inputs) shuffled and sorted the LABEL table twice per step.
-    # With them a step's only exchange is the edge-sized groupBy(dst).
-    # Flip spark.zylyty.cc.broadcastEdges=false on a cluster whose
-    # duplicate-edge set outgrows executor memory — both joins then
-    # degrade to hash-partitioned, the same algorithm.
-    bcast_edges = (
-        spark.conf.get("spark.zylyty.cc.broadcastEdges", "true") == "true"
-    )
-
-    def _step(lbl: DataFrame) -> DataFrame:
-        sym_side = F.broadcast(sym) if bcast_edges else sym
+    labels = nodes.select("node", F.col("node").alias("component"))
+    prev_sum = None
+    while True:
         nbr_min = (
-            sym_side.join(lbl, sym.src == lbl.node)
+            sym.join(labels, sym.src == labels.node)
             .groupBy(F.col("dst").alias("node2"))
             .agg(F.min("component").alias("nbr_component"))
         )
-        nbr_side = F.broadcast(nbr_min) if bcast_edges else nbr_min
-        return lbl.join(nbr_side, lbl.node == nbr_min.node2, "left").select(
-            "node",
-            F.least(
-                F.col("component"),
-                F.coalesce(F.col("nbr_component"), F.col("component")),
-            ).alias("component"),
+        # least() skips NULL, so a node with no neighbor keeps its label
+        labels = (
+            labels.join(nbr_min, labels.node == nbr_min.node2, "left")
+            .select("node", F.least("component", "nbr_component").alias("component"))
+            .localCheckpoint(eager=False)
         )
-
-    steps_cap = int(spark.conf.get("spark.zylyty.cc.stepsPerCycle", "1"))
-    prev_sum = None
-    converged = False
-    steps = 1
-    switched = subgraph  # True while iterating only the endpoint subgraph
-    for _ in range(MAX_CC_ROUNDS):
-        stepped = labels
-        for _s in range(steps):
-            stepped = _step(stepped)
-        labels = stepped.localCheckpoint(eager=False)
-        # ONE aggregate per cycle returns both the convergence invariant
-        # and the label count the auto mode decides from — no extra job
-        row = labels.agg(
-            F.sum("component").alias("s"), F.count("*").alias("n")
-        ).collect()[0]
-        cur_sum = row["s"]
+        cur_sum = labels.agg(F.sum("component")).collect()[0][0]
         if cur_sum == prev_sum:
-            converged = True
-            break
+            return labels
         prev_sum = cur_sum
-        steps = min(steps * 2, steps_cap)
-        if mode == "auto" and not switched and row["n"] >= auto_min:
-            # cluster-scale corpus: stop shuffling corpus-sized label
-            # tables every round — restrict the iteration to the
-            # endpoint subgraph (only nodes with an edge can still
-            # change), and re-attach the rest once after convergence.
-            # Labels started from `nodes`, so the restriction cannot
-            # admit ghost endpoints (the "true" mode precondition).
-            endpoints = sym.select(F.col("src").alias("node")).distinct()
-            labels = labels.join(endpoints, "node", "left_semi").localCheckpoint(
-                eager=False
-            )
-            switched = True
-            prev_sum = None  # the label-sum basis changed with the restriction
-    if not converged:
-        # a component whose min-label propagation distance exceeds the round
-        # cap would silently carry stale labels — fail loud instead
-        raise RuntimeError(
-            f"connected_components did not converge within {MAX_CC_ROUNDS} "
-            "rounds (component diameter exceeds the cap); raise MAX_CC_ROUNDS"
-        )
-    if not switched:
-        return labels
-    # singletons / edge-free nodes re-enter with their own id — the same
-    # label the full-node-set iteration gives them, without paying rounds
-    bcast = spark.conf.get("spark.zylyty.cc.broadcastLabels", "true") == "true"
-    final = labels.withColumnsRenamed({"node": "n2"})
-    final = F.broadcast(final) if bcast else final
-    return nodes.join(final, nodes.node == F.col("n2"), "left").select(
-        nodes.node.alias("node"),
-        F.coalesce(F.col("component"), nodes.node).alias("component"),
-    )
 
 
 def dedup_cc(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -544,8 +419,9 @@ def dedup_cc_names(spark: SparkSession, sf_dir: str) -> DataFrame:
     the minimum partkey reachable through near-dup name edges.
 
     Scale: inherits the dictionary-first pair detector (vocabulary-sized
-    graph) + the documented one-shuffle-per-round CC loop; the name
-    dictionary join at the end is broadcast-sized by construction.
+    graph) + the min-label propagation loop of
+    :func:`connected_components` (3 rounds at sf0.1); the name dictionary
+    join at the end is broadcast-sized by construction.
     """
     from .dedup import dedup_edit_distance
 
@@ -899,8 +775,9 @@ def dedup_multimodal_cc(spark: SparkSession, sf_dir: str) -> DataFrame:
     :func:`..multimodal.audio_pairs_cached`) — each modality's detection
     runs once per source identity and every composition starts from
     output-sized columnar pair scans; the union is pair-count-sized; CC
-    is the same min-label propagation loop with checkpoint-truncated
-    lineage, one key-partitioned shuffle per round.
+    is the min-label propagation loop of :func:`connected_components`,
+    one edge join + one aggregate per round. The union graph is the
+    deepest CC input here: 16 rounds at sf0.1 (diameter + 1 at most).
     """
     from .dedup import embedding_pairs_cached, minhash_pairs_cached
     from .multimodal import audio_pairs_cached, phash_pairs_cached
