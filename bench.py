@@ -308,18 +308,6 @@ def headline_queries() -> dict:
     return {n: all_q[n] for n in names if n in all_q}
 
 
-STREAM_STATE_CONFS = (
-    # every durable-artifact root the streaming ops resolve; pointed at a
-    # fresh bench-owned dir so each stream query actually processes its
-    # micro-batches instead of no-op-reading a previous run's state
-    "spark.zylyty.pairCacheDir",
-    "spark.zylyty.streamSinkDir",
-    "spark.zylyty.streamLateDir",
-    "spark.zylyty.annIndexDir",
-    "spark.zylyty.formatDir",
-)
-
-
 def bench_stream_queries(spark) -> tuple[dict[str, float], dict[str, float]]:
     """The streaming latency lane (r10 VERDICT item 5; r13 item 5): wall
     seconds per stream query, BEST OF 2 REPLAYS — each attempt runs in
@@ -340,20 +328,21 @@ def bench_stream_queries(spark) -> tuple[dict[str, float], dict[str, float]]:
     import tempfile
 
     import __spark_entry__ as entry_mod
+    from zylyty_data_engineer_challenge_spark.catalog import point_artifact_roots
 
     stream_q = {
         n: fn for n, fn in entry_mod.queries().items() if n.startswith("stream_")
     }
     root = tempfile.mkdtemp(prefix="zylyty_bench_stream_")
-    prev = {c: spark.conf.get(c, None) for c in STREAM_STATE_CONFS}
     best: dict[str, float] = {}
     cold: dict[str, float] = {}
     try:
         for name, fn in stream_q.items():
             for attempt in range(2):
+                # every artifact root in a fresh dir, so each attempt
+                # processes its micro-batches instead of reading old state
                 sub = os.path.join(root, f"{name}_a{attempt}")
-                for c in STREAM_STATE_CONFS:
-                    spark.conf.set(c, os.path.join(sub, c.rsplit(".", 1)[-1]))
+                point_artifact_roots(spark, sub)
                 t0 = time.perf_counter()
                 df = fn(spark, SF_DIR)
                 df.write.format("noop").mode("overwrite").save()
@@ -367,11 +356,7 @@ def bench_stream_queries(spark) -> tuple[dict[str, float], dict[str, float]]:
                 file=sys.stderr,
             )
     finally:
-        for c, v in prev.items():
-            if v is None:
-                spark.conf.unset(c)
-            else:
-                spark.conf.set(c, v)
+        point_artifact_roots(spark, None)
         shutil.rmtree(root, ignore_errors=True)
     return best, cold
 

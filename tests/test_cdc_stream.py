@@ -89,21 +89,19 @@ def test_delete_not_resurrected_by_late_older_update(spark, tmp_path):
     assert rows[3] == ("keep", None)
 
 
-def test_stream_cdc_apply_exactly_once_retrigger(spark, sf_dir, tmp_path):
+def test_stream_cdc_apply_exactly_once_retrigger(spark, sf_dir, artifact_roots):
     """Re-triggering the registry replay must process zero new batches:
     no new snapshot version appears and the result is identical."""
     import os
 
-    spark.conf.set("spark.zylyty.pairCacheDir", str(tmp_path / "pc"))
-    try:
-        first = stream_cdc_apply(spark, sf_dir).collect()
-        [work] = [
-            str(p) for p in (tmp_path / "pc").iterdir() if (p / "chk").exists()
-        ]
-        snaps1 = sorted(d for d in os.listdir(work) if d.startswith("snap_"))
-        second = stream_cdc_apply(spark, sf_dir).collect()
-        snaps2 = sorted(d for d in os.listdir(work) if d.startswith("snap_"))
-        assert snaps2 == snaps1, "re-trigger must not write a new snapshot"
-        assert second == first
-    finally:
-        spark.conf.unset("spark.zylyty.pairCacheDir")
+    first = stream_cdc_apply(spark, sf_dir).collect()
+    [work] = [
+        str(p)
+        for p in (artifact_roots / "pairCacheDir").iterdir()
+        if (p / "chk").exists()
+    ]
+    snaps1 = sorted(d for d in os.listdir(work) if d.startswith("snap_"))
+    second = stream_cdc_apply(spark, sf_dir).collect()
+    snaps2 = sorted(d for d in os.listdir(work) if d.startswith("snap_"))
+    assert snaps2 == snaps1, "re-trigger must not write a new snapshot"
+    assert second == first

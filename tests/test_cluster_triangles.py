@@ -621,7 +621,9 @@ def test_kcore_peeling_semantics_on_chain_and_clique(spark):
     assert got[11] == 2 and got[12] == 2
 
 
-def test_multimodal_cc_unions_signals_across_modalities(spark, tmp_path):
+def test_multimodal_cc_unions_signals_across_modalities(
+    spark, tmp_path, artifact_roots
+):
     """dedup_multimodal_cc (r9): a cluster must merge through DIFFERENT
     modalities — doc 1~2 via text shingles (identical text), doc 2~3 via
     embedding cosine (near-identical vectors, dissimilar text) — so all
@@ -632,36 +634,32 @@ def test_multimodal_cc_unions_signals_across_modalities(spark, tmp_path):
     )
     from zylyty_data_engineer_challenge_spark.schemas import DOCUMENTS, EMBEDDINGS
 
-    spark.conf.set("spark.zylyty.pairCacheDir", str(tmp_path / "pc"))
-    try:
-        t = "the quick brown fox jumps over the lazy dog again and again"
-        u = "completely different words about maritime navigation charts"
-        docs = [
-            (1, t, "en", "s", len(t)),
-            (2, t, "en", "s", len(t)),
-            (3, u, "en", "s", len(u)),
-            (4, "an unrelated singleton document entirely", "en", "s", 40),
-        ]
-        v = [float(x % 7) + 1.0 for x in range(64)]  # fixture dim = 64
-        emb = [
-            (2, v, 0),
-            (3, [x + 0.001 for x in v], 0),  # cos ~ 1 with vec 2
-            # alternating-sign vector: cosine with v is ~0 (well under
-            # the 0.45 threshold), so 4 is separate BY the math, not by a
-            # lucky banding miss
-            (4, [val if i % 2 == 0 else -val for i, val in enumerate(v)], 0),
-        ]
-        d = tmp_path / "mmcc"
-        spark.createDataFrame(docs, DOCUMENTS).coalesce(1).write.parquet(
-            str(d / "documents.parquet")
-        )
-        spark.createDataFrame(emb, EMBEDDINGS).coalesce(1).write.parquet(
-            str(d / "embeddings.parquet")
-        )
-        out = {r["doc_id"]: r for r in dedup_multimodal_cc(spark, str(d)).collect()}
-        assert out[1]["component"] == out[2]["component"] == out[3]["component"] == 1
-        assert out[4]["component"] == 4 and out[4]["is_representative"] == 1
-        assert out[1]["is_representative"] == 1
-        assert out[2]["is_representative"] == out[3]["is_representative"] == 0
-    finally:
-        spark.conf.unset("spark.zylyty.pairCacheDir")
+    t = "the quick brown fox jumps over the lazy dog again and again"
+    u = "completely different words about maritime navigation charts"
+    docs = [
+        (1, t, "en", "s", len(t)),
+        (2, t, "en", "s", len(t)),
+        (3, u, "en", "s", len(u)),
+        (4, "an unrelated singleton document entirely", "en", "s", 40),
+    ]
+    v = [float(x % 7) + 1.0 for x in range(64)]  # fixture dim = 64
+    emb = [
+        (2, v, 0),
+        (3, [x + 0.001 for x in v], 0),  # cos ~ 1 with vec 2
+        # alternating-sign vector: cosine with v is ~0 (well under
+        # the 0.45 threshold), so 4 is separate BY the math, not by a
+        # lucky banding miss
+        (4, [val if i % 2 == 0 else -val for i, val in enumerate(v)], 0),
+    ]
+    d = tmp_path / "mmcc"
+    spark.createDataFrame(docs, DOCUMENTS).coalesce(1).write.parquet(
+        str(d / "documents.parquet")
+    )
+    spark.createDataFrame(emb, EMBEDDINGS).coalesce(1).write.parquet(
+        str(d / "embeddings.parquet")
+    )
+    out = {r["doc_id"]: r for r in dedup_multimodal_cc(spark, str(d)).collect()}
+    assert out[1]["component"] == out[2]["component"] == out[3]["component"] == 1
+    assert out[4]["component"] == 4 and out[4]["is_representative"] == 1
+    assert out[1]["is_representative"] == 1
+    assert out[2]["is_representative"] == out[3]["is_representative"] == 0

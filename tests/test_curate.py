@@ -143,7 +143,7 @@ def test_boilerplate_strip_semantics(spark):
     assert got[1]["clean_hash"] == hashlib.md5(f"{seg_a} {seg_b}".encode()).hexdigest()
 
 
-def test_ann_index_build_is_idempotent(spark, tmp_path):
+def test_ann_index_build_is_idempotent(spark, artifact_roots):
     """Second build call must skip entirely (ready marker): no file in the
     index tree is rewritten."""
     import os
@@ -152,23 +152,19 @@ def test_ann_index_build_is_idempotent(spark, tmp_path):
         build_ann_index,
     )
 
-    spark.conf.set("spark.zylyty.annIndexDir", str(tmp_path / "ann"))
-    try:
-        base = build_ann_index(spark, "/root/testdata/sf0.001")
+    base = build_ann_index(spark, SF_DIR)
 
-        def tree():
-            return {
-                os.path.join(dp, f): os.stat(os.path.join(dp, f)).st_mtime_ns
-                for dp, _, fs in os.walk(base)
-                for f in fs
-            }
+    def tree():
+        return {
+            os.path.join(dp, f): os.stat(os.path.join(dp, f)).st_mtime_ns
+            for dp, _, fs in os.walk(base)
+            for f in fs
+        }
 
-        before = tree()
-        assert any(f.endswith(".parquet") for f in before)
-        assert build_ann_index(spark, "/root/testdata/sf0.001") == base
-        assert tree() == before, "re-build must not rewrite the index"
-    finally:
-        spark.conf.unset("spark.zylyty.annIndexDir")
+    before = tree()
+    assert any(f.endswith(".parquet") for f in before)
+    assert build_ann_index(spark, SF_DIR) == base
+    assert tree() == before, "re-build must not rewrite the index"
 
 
 def test_shard_assign_exact_balance(spark):

@@ -23,18 +23,8 @@ from __future__ import annotations
 import shutil
 from pathlib import Path
 
-import pytest
 
 from zylyty_data_engineer_challenge_spark.operators import cluster, lexical
-
-
-@pytest.fixture()
-def pair_cache(spark, tmp_path):
-    spark.conf.set("spark.zylyty.pairCacheDir", str(tmp_path / "pair_cache"))
-    try:
-        yield str(tmp_path / "pair_cache")
-    finally:
-        spark.conf.unset("spark.zylyty.pairCacheDir")
 
 
 def _lex_forget_base(spark, sf_dir) -> Path:
@@ -53,7 +43,7 @@ def _labels_forget_base(spark, sf_dir) -> Path:
     )
 
 
-def test_bm25_forget_reheals_after_interrupted_swap(spark, sf_dir, pair_cache):
+def test_bm25_forget_reheals_after_interrupted_swap(spark, sf_dir, artifact_roots):
     want = [tuple(r) for r in lexical.bm25_index_forget(spark, sf_dir).collect()]
     base = _lex_forget_base(spark, sf_dir)
 
@@ -70,7 +60,7 @@ def test_bm25_forget_reheals_after_interrupted_swap(spark, sf_dir, pair_cache):
 
 
 def test_bm25_forget_reheals_even_with_stale_forget_marker(
-    spark, sf_dir, pair_cache
+    spark, sf_dir, artifact_roots
 ):
     """If the crash landed AFTER the forget marker was written but a data
     tree is missing (marker-complete, dir-gone — the unrecoverable state
@@ -87,7 +77,7 @@ def test_bm25_forget_reheals_even_with_stale_forget_marker(
 
 
 def test_cluster_labels_forget_reheals_after_interrupted_swap(
-    spark, sf_dir, pair_cache
+    spark, sf_dir, artifact_roots
 ):
     want = [tuple(r) for r in cluster.cluster_labels_forget(spark, sf_dir).collect()]
     base = _labels_forget_base(spark, sf_dir)

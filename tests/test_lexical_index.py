@@ -11,21 +11,11 @@ from __future__ import annotations
 
 import re
 
-import pytest
 
 from zylyty_data_engineer_challenge_spark.operators import lexical, text
 
 
-@pytest.fixture()
-def pair_cache(spark, tmp_path):
-    spark.conf.set("spark.zylyty.pairCacheDir", str(tmp_path / "pair_cache"))
-    try:
-        yield str(tmp_path / "pair_cache")
-    finally:
-        spark.conf.unset("spark.zylyty.pairCacheDir")
-
-
-def test_probe_matches_in_plan_bm25_exactly(spark, sf_dir, pair_cache):
+def test_probe_matches_in_plan_bm25_exactly(spark, sf_dir, artifact_roots):
     """Stored-counts round-trip exactness: the persisted-index probe must
     return byte-identical rows to the index-free text_bm25 (same oracle
     by construction; asserted directly so a parquet type drift can't hide
@@ -39,7 +29,7 @@ def test_probe_matches_in_plan_bm25_exactly(spark, sf_dir, pair_cache):
     assert lexical.bm25_index_append(spark, sf_dir).collect() == want
 
 
-def test_probe_scan_is_partition_pruned(spark, sf_dir, pair_cache):
+def test_probe_scan_is_partition_pruned(spark, sf_dir, artifact_roots):
     """The postings scan must carry a PartitionFilter on the probed tb
     buckets — the inverted-file seek expressed as partition pruning;
     without it the probe reads every posting and the persistence buys
@@ -63,7 +53,7 @@ def test_probe_scan_is_partition_pruned(spark, sf_dir, pair_cache):
 
 
 def test_forget_physically_purges_and_forgets_statistics(
-    spark, sf_dir, pair_cache
+    spark, sf_dir, artifact_roots
 ):
     """After the purge: zero revoked doc_ids in postings OR doclens, the
     stats row equals the survivors' recount (N/avgdl forget the source
@@ -98,7 +88,7 @@ def test_forget_physically_purges_and_forgets_statistics(
     assert stats[0]["total_tokens"] == sum(r["dl"] for r in dl_rows)
 
 
-def test_stream_append_equals_batch_and_exactly_once(spark, sf_dir, pair_cache):
+def test_stream_append_equals_batch_and_exactly_once(spark, sf_dir, artifact_roots):
     """The streamed store must serve the identical ranking to the in-plan
     scorer (split-invariance: postings/doclens are per-document, stats
     SUM-merge), and a re-trigger must process zero batches — the second
@@ -113,7 +103,7 @@ def test_stream_append_equals_batch_and_exactly_once(spark, sf_dir, pair_cache):
 
 
 def test_compact_leaves_one_file_per_bucket_and_serves_identically(
-    spark, sf_dir, pair_cache
+    spark, sf_dir, artifact_roots
 ):
     """Compaction contract: after bm25_index_compact, every tb partition
     directory of the compacted postings tree holds EXACTLY ONE parquet
@@ -190,7 +180,7 @@ def test_python_xxh64_matches_spark_xxhash64(spark):
 
 
 def test_hybrid_batch_prunes_both_scans_to_the_union_buckets(
-    spark, sf_dir, pair_cache, tmp_path
+    spark, sf_dir, artifact_roots
 ):
     """sim_hybrid_probe_batch (r12): the WHOLE batch must cost two index
     seeks — the codes scan dynamically partition-pruned on cid, and ONE
@@ -200,14 +190,10 @@ def test_hybrid_batch_prunes_both_scans_to_the_union_buckets(
     import contextlib
     import io
 
-    spark.conf.set("spark.zylyty.annIndexDir", str(tmp_path / "ann"))
-    try:
-        df = lexical.sim_hybrid_probe_batch(spark, sf_dir)
-        buf = io.StringIO()
-        with contextlib.redirect_stdout(buf):
-            df.explain("formatted")
-    finally:
-        spark.conf.unset("spark.zylyty.annIndexDir")
+    df = lexical.sim_hybrid_probe_batch(spark, sf_dir)
+    buf = io.StringIO()
+    with contextlib.redirect_stdout(buf):
+        df.explain("formatted")
     plan = buf.getvalue()
     cid = [
         line
@@ -236,7 +222,7 @@ def test_hybrid_batch_prunes_both_scans_to_the_union_buckets(
 
 
 def test_hybrid_batch_query3_slice_equals_single_probe(
-    spark, sf_dir, pair_cache, tmp_path
+    spark, sf_dir, artifact_roots
 ):
     """Query 3 of the batch is the original (RRF_QUERY, BM25_TERMS) pair,
     so its batch rows must be byte-identical to sim_hybrid_probe's —
@@ -247,12 +233,8 @@ def test_hybrid_batch_query3_slice_equals_single_probe(
         RRF_QUERY,
     )
 
-    spark.conf.set("spark.zylyty.annIndexDir", str(tmp_path / "ann"))
-    try:
-        batch = lexical.sim_hybrid_probe_batch(spark, sf_dir).collect()
-        single = lexical.sim_hybrid_probe(spark, sf_dir).collect()
-    finally:
-        spark.conf.unset("spark.zylyty.annIndexDir")
+    batch = lexical.sim_hybrid_probe_batch(spark, sf_dir).collect()
+    single = lexical.sim_hybrid_probe(spark, sf_dir).collect()
     got = [
         (r["rank"], r["doc_id"], r["dense_rank"], r["lex_rank"], r["rrf"])
         for r in batch

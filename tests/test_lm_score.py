@@ -73,48 +73,40 @@ def test_lm_score_all_integer_schema(spark, sf_dir):
     }
 
 
-def test_lm_append_equals_retrain_and_idempotent(spark, sf_dir, tmp_path):
+def test_lm_append_equals_retrain_and_idempotent(spark, sf_dir, artifact_roots):
     """text_lm_append: the merged persisted model must serve scores
     hash-equal to the in-plan full retrain, and a re-run must append
     nothing (marker idempotency)."""
-    spark.conf.set("spark.zylyty.pairCacheDir", str(tmp_path / "pc"))
-    try:
-        retrain = sorted(
-            tuple(r) for r in text.text_lm_score(spark, sf_dir).collect()
-        )
-        first = sorted(
-            tuple(r) for r in text.text_lm_append(spark, sf_dir).collect()
-        )
-        assert first == retrain, "append must equal full retrain"
-        second = sorted(
-            tuple(r) for r in text.text_lm_append(spark, sf_dir).collect()
-        )
-        assert second == first, "re-run must be a no-op read"
-    finally:
-        spark.conf.unset("spark.zylyty.pairCacheDir")
+    retrain = sorted(
+        tuple(r) for r in text.text_lm_score(spark, sf_dir).collect()
+    )
+    first = sorted(
+        tuple(r) for r in text.text_lm_append(spark, sf_dir).collect()
+    )
+    assert first == retrain, "append must equal full retrain"
+    second = sorted(
+        tuple(r) for r in text.text_lm_append(spark, sf_dir).collect()
+    )
+    assert second == first, "re-run must be a no-op read"
 
 
-def test_lm_compact_one_file_per_bucket_and_equal(spark, sf_dir, tmp_path):
+def test_lm_compact_one_file_per_bucket_and_equal(spark, sf_dir, artifact_roots):
     """text_lm_compact: scoring over the compacted (merge-materialized)
     model must equal the in-plan retrain, with exactly one parquet file
     per bucket partition."""
     from zylyty_data_engineer_challenge_spark.operators.dedup import _pair_cache_dir
 
-    spark.conf.set("spark.zylyty.pairCacheDir", str(tmp_path / "pc"))
-    try:
-        retrain = sorted(
-            tuple(r) for r in text.text_lm_score(spark, sf_dir).collect()
-        )
-        compacted = sorted(
-            tuple(r) for r in text.text_lm_compact(spark, sf_dir).collect()
-        )
-        assert compacted == retrain
+    retrain = sorted(
+        tuple(r) for r in text.text_lm_score(spark, sf_dir).collect()
+    )
+    compacted = sorted(
+        tuple(r) for r in text.text_lm_compact(spark, sf_dir).collect()
+    )
+    assert compacted == retrain
 
-        base = _pair_cache_dir(spark, sf_dir, modality="lm-append")
-        files = spark.read.parquet(f"{base}/c12_compact").inputFiles()
-        buckets = {f.split("bucket=")[1].split("/")[0] for f in files}
-        assert len(files) == len(buckets), (
-            f"{len(files)} files over {len(buckets)} buckets"
-        )
-    finally:
-        spark.conf.unset("spark.zylyty.pairCacheDir")
+    base = _pair_cache_dir(spark, sf_dir, modality="lm-append")
+    files = spark.read.parquet(f"{base}/c12_compact").inputFiles()
+    buckets = {f.split("bucket=")[1].split("/")[0] for f in files}
+    assert len(files) == len(buckets), (
+        f"{len(files)} files over {len(buckets)} buckets"
+    )

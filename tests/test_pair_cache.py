@@ -17,25 +17,15 @@ from __future__ import annotations
 
 import shutil
 
-import pytest
 
 from zylyty_data_engineer_challenge_spark.operators import dedup, graph
-
-
-@pytest.fixture()
-def pair_cache(spark, tmp_path):
-    spark.conf.set("spark.zylyty.pairCacheDir", str(tmp_path / "pair_cache"))
-    try:
-        yield str(tmp_path / "pair_cache")
-    finally:
-        spark.conf.unset("spark.zylyty.pairCacheDir")
 
 
 def _physical_plan(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
-def test_cached_pairs_equal_direct_lsh(spark, sf_dir, pair_cache):
+def test_cached_pairs_equal_direct_lsh(spark, sf_dir, artifact_roots):
     direct = sorted(
         tuple(r) for r in dedup.dedup_minhash_lsh(spark, sf_dir).collect()
     )
@@ -48,7 +38,7 @@ def test_cached_pairs_equal_direct_lsh(spark, sf_dir, pair_cache):
     assert cached == direct
 
 
-def test_second_consumer_reads_persisted_pairs(spark, sf_dir, pair_cache):
+def test_second_consumer_reads_persisted_pairs(spark, sf_dir, artifact_roots):
     """After any first consumer builds the cache, every later consumer's
     plan must START from a parquet scan of the cache — no shingling, no
     minhash, no band join anywhere in it."""
@@ -77,42 +67,38 @@ def test_second_consumer_reads_persisted_pairs(spark, sf_dir, pair_cache):
             )
 
 
-def test_regenerated_source_invalidates_cache(spark, sf_dir, tmp_path):
+def test_regenerated_source_invalidates_cache(spark, sf_dir, tmp_path, artifact_roots):
     """Identity-keyed staleness: rewriting documents.parquet at the same
     path must change the cache directory (old pairs can never be served
     against new bytes) and trigger a fresh detection run."""
     import os
 
-    spark.conf.set("spark.zylyty.pairCacheDir", str(tmp_path / "pc"))
-    try:
-        sf_copy = tmp_path / "sf"
-        sf_copy.mkdir()
-        shutil.copyfile(
-            f"{sf_dir}/documents.parquet", sf_copy / "documents.parquet"
-        )
-        dir1 = dedup._pair_cache_dir(spark, str(sf_copy))
-        n1 = dedup.minhash_pairs_cached(spark, str(sf_copy)).count()
-        assert os.path.exists(f"{dir1}/_PAIRS_READY")
+    sf_copy = tmp_path / "sf"
+    sf_copy.mkdir()
+    shutil.copyfile(
+        f"{sf_dir}/documents.parquet", sf_copy / "documents.parquet"
+    )
+    dir1 = dedup._pair_cache_dir(spark, str(sf_copy))
+    n1 = dedup.minhash_pairs_cached(spark, str(sf_copy)).count()
+    assert os.path.exists(f"{dir1}/_PAIRS_READY")
 
-        # regenerate: same path, different mtime+size
-        with open(sf_copy / "documents.parquet", "ab") as f:
-            f.write(b"\x00")
-        st = os.stat(sf_copy / "documents.parquet")
-        os.utime(sf_copy / "documents.parquet", (st.st_atime + 5, st.st_mtime + 5))
+    # regenerate: same path, different mtime+size
+    with open(sf_copy / "documents.parquet", "ab") as f:
+        f.write(b"\x00")
+    st = os.stat(sf_copy / "documents.parquet")
+    os.utime(sf_copy / "documents.parquet", (st.st_atime + 5, st.st_mtime + 5))
 
-        dir2 = dedup._pair_cache_dir(spark, str(sf_copy))
-        assert dir2 != dir1, "regenerated source must change cache identity"
-        assert not os.path.exists(f"{dir2}/_PAIRS_READY"), (
-            "new identity must start unbuilt"
-        )
-        # the old build is untouched and the new identity would re-detect
-        assert os.path.exists(f"{dir1}/_PAIRS_READY")
-        assert n1 >= 0
-    finally:
-        spark.conf.unset("spark.zylyty.pairCacheDir")
+    dir2 = dedup._pair_cache_dir(spark, str(sf_copy))
+    assert dir2 != dir1, "regenerated source must change cache identity"
+    assert not os.path.exists(f"{dir2}/_PAIRS_READY"), (
+        "new identity must start unbuilt"
+    )
+    # the old build is untouched and the new identity would re-detect
+    assert os.path.exists(f"{dir1}/_PAIRS_READY")
+    assert n1 >= 0
 
 
-def test_embedding_pairs_cached_equal_direct(spark, sf_dir, pair_cache):
+def test_embedding_pairs_cached_equal_direct(spark, sf_dir, artifact_roots):
     direct = sorted(
         tuple(r) for r in dedup.dedup_embedding_lsh(spark, sf_dir).collect()
     )
@@ -125,7 +111,7 @@ def test_embedding_pairs_cached_equal_direct(spark, sf_dir, pair_cache):
     assert cached == direct
 
 
-def test_phash_pairs_cached_equal_direct(spark, sf_dir, pair_cache):
+def test_phash_pairs_cached_equal_direct(spark, sf_dir, artifact_roots):
     from zylyty_data_engineer_challenge_spark.operators import multimodal
 
     direct = sorted(
@@ -140,7 +126,7 @@ def test_phash_pairs_cached_equal_direct(spark, sf_dir, pair_cache):
     assert cached == direct
 
 
-def test_multimodal_cc_served_from_caches(spark, sf_dir, pair_cache):
+def test_multimodal_cc_served_from_caches(spark, sf_dir, artifact_roots):
     """After one warming call of dedup_multimodal_cc, all three modality
     caches must exist, each cached accessor must be a bare parquet scan
     of its own cache directory (no Arrow-batched decode/verify stage, no
@@ -180,7 +166,7 @@ def test_multimodal_cc_served_from_caches(spark, sf_dir, pair_cache):
     assert rows2 == rows1, "cache-served result must equal the warming run"
 
 
-def test_lloyd_labels_cached_equal_direct(spark, sf_dir, pair_cache):
+def test_lloyd_labels_cached_equal_direct(spark, sf_dir, artifact_roots):
     """The persisted trained-assignment table must equal a live Lloyd run
     exactly, and the accessor must be a bare parquet scan (no crossJoin
     with the centroid table, no aggregate — training happened once)."""
@@ -202,7 +188,7 @@ def test_lloyd_labels_cached_equal_direct(spark, sf_dir, pair_cache):
         assert marker not in plan, f"lloyd cache accessor re-trains ({marker})"
 
 
-def test_minhash_append_idempotent_and_equals_rebuild(spark, sf_dir, pair_cache):
+def test_minhash_append_idempotent_and_equals_rebuild(spark, sf_dir, artifact_roots):
     """dedup_minhash_append (r8 VERDICT item 4): the persisted base +
     appended batch must serve the EXACT full-rebuild pair set, and a
     re-run must not duplicate stored rows (marker idempotency)."""

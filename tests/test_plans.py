@@ -15,6 +15,7 @@ import re
 
 import pytest
 
+from zylyty_data_engineer_challenge_spark.catalog import artifact_dir
 from zylyty_data_engineer_challenge_spark.operators import dedup, similarity
 from zylyty_data_engineer_challenge_spark.queries import relational, views, warehouse
 
@@ -134,6 +135,24 @@ def test_no_collect_in_query_modules():
         for i, line in enumerate(src.splitlines(), 1):
             if ".collect()" in line and "graph.py" not in str(p):
                 offenders.append(f"{p.name}:{i}")
+    assert not offenders, offenders
+
+
+def test_artifact_roots_resolve_only_in_catalog():
+    # every durable-artifact directory comes from catalog.artifact_dir; a
+    # tempdir default or a spark.zylyty.*Dir conf anywhere else is a
+    # second copy of the root rule
+    import pathlib
+
+    root = pathlib.Path(__file__).resolve().parents[1] / "zylyty_data_engineer_challenge_spark"
+    rule = re.compile(r"tempfile\.gettempdir\(|spark\.zylyty\.[a-zA-Z]*Dir")
+    offenders = [
+        f"{p.relative_to(root)}:{i}"
+        for p in root.rglob("*.py")
+        if p != root / "catalog.py"
+        for i, line in enumerate(p.read_text().splitlines(), 1)
+        if rule.search(line)
+    ]
     assert not offenders, offenders
 
 
@@ -427,17 +446,13 @@ def test_edit_distance_is_dictionary_first(spark):
     assert aggs_above >= 2, plan  # both join sides built from the dictionary agg
 
 
-def test_index_probe_scan_is_dynamically_pruned(spark, tmp_path):
+def test_index_probe_scan_is_dynamically_pruned(spark, artifact_roots):
     """The persisted-index probe must read ONLY the probed lists: the
     codes scan (partitioned by cid) carries a dynamic partition pruning
     expression fed by the tiny probes side — the inverted-file seek,
     expressed as partition pruning. Without it the probe degenerates to a
     full-index scan and the persistence buys nothing at scale."""
-    spark.conf.set("spark.zylyty.annIndexDir", str(tmp_path / "ann"))
-    try:
-        plan = formatted_plan(similarity.sim_index_probe(spark, SF_DIR))
-    finally:
-        spark.conf.unset("spark.zylyty.annIndexDir")
+    plan = formatted_plan(similarity.sim_index_probe(spark, SF_DIR))
     pf = [
         line
         for line in plan.splitlines()
@@ -449,31 +464,23 @@ def test_index_probe_scan_is_dynamically_pruned(spark, tmp_path):
     )
 
 
-def test_index_probe_matches_in_memory_ivfpq(spark, tmp_path):
+def test_index_probe_matches_in_memory_ivfpq(spark, artifact_roots):
     """Persisted round-trip exactness: probing the on-disk index returns
     byte-identical rows to the in-memory IVFADC build (same oracle by
     construction; asserted directly here so a parquet type drift can't
     hide behind the shared oracle)."""
-    spark.conf.set("spark.zylyty.annIndexDir", str(tmp_path / "ann"))
-    try:
-        got = similarity.sim_index_probe(spark, SF_DIR).collect()
-    finally:
-        spark.conf.unset("spark.zylyty.annIndexDir")
+    got = similarity.sim_index_probe(spark, SF_DIR).collect()
     want = similarity.sim_ann_ivfpq(spark, SF_DIR).collect()
     assert got == want
 
 
-def test_index_rerank_matches_in_memory_rerank(spark, tmp_path):
+def test_index_rerank_matches_in_memory_rerank(spark, artifact_roots):
     """The store-served two-stage path (what sim_eval_mrr scores) must be
     byte-identical to the in-memory rerank: every stored artifact is
     integer-exact, so the PQ shortlist — and the exact rerank over it —
     cannot drift. This is the pin that lets sim_eval_mrr keep
     sim_ann_rerank's oracle while reading the persisted index."""
-    spark.conf.set("spark.zylyty.annIndexDir", str(tmp_path / "ann"))
-    try:
-        got = similarity.sim_index_rerank(spark, SF_DIR).collect()
-    finally:
-        spark.conf.unset("spark.zylyty.annIndexDir")
+    got = similarity.sim_index_rerank(spark, SF_DIR).collect()
     want = similarity.sim_ann_rerank(spark, SF_DIR).collect()
     assert got == want
 
@@ -481,16 +488,12 @@ def test_index_rerank_matches_in_memory_rerank(spark, tmp_path):
 @pytest.mark.parametrize(
     "fn", [similarity.sim_eval_mrr, similarity.sim_ann_param_sweep]
 )
-def test_eval_queries_serve_from_pruned_stored_codes(spark, tmp_path, fn):
+def test_eval_queries_serve_from_pruned_stored_codes(spark, fn, artifact_roots):
     """The eval canaries (MRR, NPROBE sweep) must read the PERSISTED
     cid-partitioned code table with dynamic partition pruning — never
     rebuild the index in-plan (r10 VERDICT item 2: an eval that re-encodes
     the corpus per run is a rebuild, not a canary)."""
-    spark.conf.set("spark.zylyty.annIndexDir", str(tmp_path / "ann"))
-    try:
-        plan = formatted_plan(fn(spark, SF_DIR))
-    finally:
-        spark.conf.unset("spark.zylyty.annIndexDir")
+    plan = formatted_plan(fn(spark, SF_DIR))
     pf = [
         line
         for line in plan.splitlines()
@@ -502,20 +505,14 @@ def test_eval_queries_serve_from_pruned_stored_codes(spark, tmp_path, fn):
     )
 
 
-def test_hybrid_probe_prunes_both_index_scans(spark, tmp_path):
+def test_hybrid_probe_prunes_both_index_scans(spark, artifact_roots):
     """sim_hybrid_probe must inherit BOTH stores' seek properties in one
     plan: the ANN codes scan dynamically partition-pruned on cid AND the
     postings scan statically pruned on the probed tb buckets — a hybrid
     query that full-scans either index forfeits the persistence."""
     from zylyty_data_engineer_challenge_spark.operators import lexical
 
-    spark.conf.set("spark.zylyty.annIndexDir", str(tmp_path / "ann"))
-    spark.conf.set("spark.zylyty.pairCacheDir", str(tmp_path / "pc"))
-    try:
-        plan = formatted_plan(lexical.sim_hybrid_probe(spark, SF_DIR))
-    finally:
-        spark.conf.unset("spark.zylyty.annIndexDir")
-        spark.conf.unset("spark.zylyty.pairCacheDir")
+    plan = formatted_plan(lexical.sim_hybrid_probe(spark, SF_DIR))
     cid = [
         line
         for line in plan.splitlines()
@@ -531,7 +528,7 @@ def test_hybrid_probe_prunes_both_index_scans(spark, tmp_path):
 
 
 def test_filtered_ann_serves_from_pruned_store_with_pushed_metadata(
-    spark, tmp_path
+    spark, artifact_roots
 ):
     """sim_filtered_ann store-serving pin (r12, VERDICT r11 item 4): the
     candidate set must come from the PERSISTED code table — the codes
@@ -540,11 +537,7 @@ def test_filtered_ann_serves_from_pruned_store_with_pushed_metadata(
     predicate must reach the documents scan as a pushed lang filter.
     A plan that re-encodes the corpus in-plan has no pruned codes scan;
     a post-filter plan has no documents scan below the ranking window."""
-    spark.conf.set("spark.zylyty.annIndexDir", str(tmp_path / "ann"))
-    try:
-        plan = formatted_plan(similarity.sim_filtered_ann(spark, SF_DIR))
-    finally:
-        spark.conf.unset("spark.zylyty.annIndexDir")
+    plan = formatted_plan(similarity.sim_filtered_ann(spark, SF_DIR))
     cid = [
         line
         for line in plan.splitlines()
@@ -564,7 +557,7 @@ def test_filtered_ann_serves_from_pruned_store_with_pushed_metadata(
     ), plan
 
 
-def test_filtered_ann_matches_r11_in_plan_candidates(spark, tmp_path):
+def test_filtered_ann_matches_r11_in_plan_candidates(spark, artifact_roots):
     """Hash-unchanged contract of the store-served refactor: the stored
     (vec_id, cid) assignment was written with the same Lloyd centroids
     and nearest-list rule the old in-plan candidate generation used, so
@@ -586,11 +579,7 @@ def test_filtered_ann_matches_r11_in_plan_candidates(spark, tmp_path):
         _rank_key,
     )
 
-    spark.conf.set("spark.zylyty.annIndexDir", str(tmp_path / "ann"))
-    try:
-        got = similarity.sim_filtered_ann(spark, SF_DIR).collect()
-    finally:
-        spark.conf.unset("spark.zylyty.annIndexDir")
+    got = similarity.sim_filtered_ann(spark, SF_DIR).collect()
 
     emb = _quantized(spark, SF_DIR)
     cents = lloyd_centroids(spark, SF_DIR)
@@ -631,7 +620,7 @@ def test_filtered_ann_matches_r11_in_plan_candidates(spark, tmp_path):
     assert got == want
 
 
-def test_zorder_probe_skips_files_and_pushes_zrange(spark, tmp_path):
+def test_zorder_probe_skips_files_and_pushes_zrange(spark, artifact_roots):
     """The data-skipping contract of q_zorder_probe (r11): the clustered
     store's files own DISJOINT zval ranges (range-partition + sort), the
     probe's Morton interval intersects only a small minority of them
@@ -645,13 +634,10 @@ def test_zorder_probe_skips_files_and_pushes_zrange(spark, tmp_path):
 
     from zylyty_data_engineer_challenge_spark.queries import warehouse as wh
 
-    spark.conf.set("spark.zylyty.formatDir", str(tmp_path / "fmt"))
-    try:
-        df = wh.q_zorder_probe(spark, SF_DIR)
-        plan = formatted_plan(df)
-        base = wh._zorder_store_dir(spark, SF_DIR).replace("file:", "")
-    finally:
-        spark.conf.unset("spark.zylyty.formatDir")
+    df = wh.q_zorder_probe(spark, SF_DIR)
+    plan = formatted_plan(df)
+    base = artifact_dir(spark, "formatDir", [f"{SF_DIR}/orders.parquet"], "zorder")
+    base = base.replace("file:", "") + "/orders_zorder"
 
     pushed = re.findall(r"PushedFilters: \[([^\]]*)\]", plan)
     assert any("zval" in p for p in pushed), plan
@@ -707,15 +693,11 @@ def test_filtered_ann_pushes_metadata_predicate(spark):
     assert count_nodes(phys, "CartesianProduct") == 0
 
 
-def test_orc_roundtrip_pushes_filter_into_orc_scan(spark, tmp_path):
+def test_orc_roundtrip_pushes_filter_into_orc_scan(spark, artifact_roots):
     """The format migration must not cost the pushdown: the l_quantity
     predicate reaches the ORC reader's PushedFilters just as it would a
     parquet scan."""
-    spark.conf.set("spark.zylyty.formatDir", str(tmp_path / "fmt"))
-    try:
-        plan = formatted_plan(warehouse.q_orc_roundtrip(spark, SF_DIR))
-    finally:
-        spark.conf.unset("spark.zylyty.formatDir")
+    plan = formatted_plan(warehouse.q_orc_roundtrip(spark, SF_DIR))
     assert "Scan orc" in plan, f"no ORC scan in plan:\n{plan}"
     # the only scan in this plan is the ORC one, so any PushedFilters
     # carrying the predicate belongs to it

@@ -97,21 +97,19 @@ class TestDsirStore:
     """The persisted DSIR estimator (r12 VERDICT item 3): the sampler
     and gate probe the store instead of re-deriving bucket counts."""
 
-    def test_sampler_count_path_reads_store_not_corpus(self, spark, tmp_path, sf_dir):
+    def test_sampler_count_path_reads_store_not_corpus(
+        self, spark, sf_dir, artifact_roots
+    ):
         import contextlib
         import io
 
         from zylyty_data_engineer_challenge_spark.operators import curate
 
-        spark.conf.set("spark.zylyty.pairCacheDir", str(tmp_path / "pc"))
-        try:
-            df = curate.curate_dsir_sample(spark, sf_dir)
-            buf = io.StringIO()
-            with contextlib.redirect_stdout(buf):
-                df.explain("formatted")
-            plan = buf.getvalue()
-        finally:
-            spark.conf.unset("spark.zylyty.pairCacheDir")
+        df = curate.curate_dsir_sample(spark, sf_dir)
+        buf = io.StringIO()
+        with contextlib.redirect_stdout(buf):
+            df.explain("formatted")
+        plan = buf.getvalue()
         # the estimator comes from the store parquet; the only corpus
         # read left per weights subtree is the one feature-extraction
         # pass (the subtree appears twice — weights + its wmax
@@ -128,7 +126,7 @@ class TestDsirStore:
         )
         assert n_doc_scans <= 2, f"{n_doc_scans} documents scans:\n{plan}"
 
-    def test_forget_equals_retrain_without_source(self, spark, tmp_path, sf_dir):
+    def test_forget_equals_retrain_without_source(self, spark, sf_dir, artifact_roots):
         from pyspark.sql import functions as F
 
         from zylyty_data_engineer_challenge_spark.catalog import load_table
@@ -137,11 +135,7 @@ class TestDsirStore:
             FORGET_SOURCE,
         )
 
-        spark.conf.set("spark.zylyty.pairCacheDir", str(tmp_path / "pc"))
-        try:
-            got = [tuple(r) for r in curate.dsir_counts_forget(spark, sf_dir).collect()]
-        finally:
-            spark.conf.unset("spark.zylyty.pairCacheDir")
+        got = [tuple(r) for r in curate.dsir_counts_forget(spark, sf_dir).collect()]
         survivors = load_table(spark, sf_dir, "documents").filter(
             F.col("source") != FORGET_SOURCE
         )
@@ -158,40 +152,32 @@ class TestMrlStore:
     """The persisted MRL prefix store: stage 1 of sim_mrl_probe scans
     the stored prefix table, bit-identical to the in-plan slice."""
 
-    def test_probe_stage1_scans_prefix_store(self, spark, tmp_path, sf_dir):
+    def test_probe_stage1_scans_prefix_store(self, spark, sf_dir, artifact_roots):
         import contextlib
         import io
 
         from zylyty_data_engineer_challenge_spark.operators import similarity
 
-        spark.conf.set("spark.zylyty.annIndexDir", str(tmp_path / "ann"))
-        try:
-            df = similarity.sim_mrl_probe(spark, sf_dir)
-            buf = io.StringIO()
-            with contextlib.redirect_stdout(buf):
-                df.explain("formatted")
-            plan = buf.getvalue()
-        finally:
-            spark.conf.unset("spark.zylyty.annIndexDir")
+        df = similarity.sim_mrl_probe(spark, sf_dir)
+        buf = io.StringIO()
+        with contextlib.redirect_stdout(buf):
+            df.explain("formatted")
+        plan = buf.getvalue()
         assert "mrl_prefix" in plan, f"stage 1 not store-served:\n{plan}"
 
-    def test_stored_prefixes_equal_in_plan_slice(self, spark, tmp_path, sf_dir):
+    def test_stored_prefixes_equal_in_plan_slice(self, spark, sf_dir, artifact_roots):
         from pyspark.sql import functions as F
 
         from zylyty_data_engineer_challenge_spark.operators import similarity
 
-        spark.conf.set("spark.zylyty.annIndexDir", str(tmp_path / "ann"))
-        try:
-            base = similarity.build_mrl_store(spark, sf_dir)
-            stored = [
-                tuple(r)
-                for r in spark.read.parquet(f"{base}/mrl_prefix")
-                .select("vec_id", "p", "pn")
-                .orderBy("vec_id")
-                .collect()
-            ]
-        finally:
-            spark.conf.unset("spark.zylyty.annIndexDir")
+        base = similarity.build_mrl_store(spark, sf_dir)
+        stored = [
+            tuple(r)
+            for r in spark.read.parquet(f"{base}/mrl_prefix")
+            .select("vec_id", "p", "pn")
+            .orderBy("vec_id")
+            .collect()
+        ]
         emb = similarity._quantized(spark, sf_dir)
         inplan = [
             tuple(r)
@@ -210,22 +196,18 @@ class TestMrlStore:
         assert stored == inplan
 
     def test_pruned_probe_prefix_scan_is_dynamically_pruned(
-        self, spark, tmp_path, sf_dir
+        self, spark, sf_dir, artifact_roots
     ):
         import contextlib
         import io
 
         from zylyty_data_engineer_challenge_spark.operators import similarity
 
-        spark.conf.set("spark.zylyty.annIndexDir", str(tmp_path / "ann"))
-        try:
-            df = similarity.sim_mrl_probe_pruned(spark, sf_dir)
-            buf = io.StringIO()
-            with contextlib.redirect_stdout(buf):
-                df.explain("formatted")
-            plan = buf.getvalue()
-        finally:
-            spark.conf.unset("spark.zylyty.annIndexDir")
+        df = similarity.sim_mrl_probe_pruned(spark, sf_dir)
+        buf = io.StringIO()
+        with contextlib.redirect_stdout(buf):
+            df.explain("formatted")
+        plan = buf.getvalue()
         assert "mrl_prefix" in plan, f"stage 1 not store-served:\n{plan}"
         pf = [
             ln
@@ -343,24 +325,20 @@ class TestPipelineCurateV2:
                 cum += r.n_tokens
 
 
-def test_dsir_compact_single_file_and_equal_rows(spark, tmp_path, sf_dir):
+def test_dsir_compact_single_file_and_equal_rows(spark, sf_dir, artifact_roots):
     """Compaction is a pure layout change: one data file, rows equal to
     the append path's read-time merge."""
     from zylyty_data_engineer_challenge_spark.operators import curate
 
-    spark.conf.set("spark.zylyty.pairCacheDir", str(tmp_path / "pc"))
-    try:
-        merged = [tuple(r) for r in curate.dsir_counts_append(spark, sf_dir).collect()]
-        compacted = [
-            tuple(r) for r in curate.dsir_counts_compact(spark, sf_dir).collect()
-        ]
-        from zylyty_data_engineer_challenge_spark.operators.dedup import (
-            _pair_cache_dir,
-        )
+    merged = [tuple(r) for r in curate.dsir_counts_append(spark, sf_dir).collect()]
+    compacted = [
+        tuple(r) for r in curate.dsir_counts_compact(spark, sf_dir).collect()
+    ]
+    from zylyty_data_engineer_challenge_spark.operators.dedup import (
+        _pair_cache_dir,
+    )
 
-        base = _pair_cache_dir(spark, sf_dir, modality="dsir-batch")
-    finally:
-        spark.conf.unset("spark.zylyty.pairCacheDir")
+    base = _pair_cache_dir(spark, sf_dir, modality="dsir-batch")
     assert compacted == merged
     import glob
 
@@ -368,7 +346,7 @@ def test_dsir_compact_single_file_and_equal_rows(spark, tmp_path, sf_dir):
     assert len(files) == curate.DSIR_COMPACT_FILES, files
 
 
-def test_dsir_staged_install_reheals_every_crash_point(spark, tmp_path, sf_dir):
+def test_dsir_staged_install_reheals_every_crash_point(spark, sf_dir, artifact_roots):
     """The additive store's double-append hazard: a crash between the
     batch installment's parquet commit and its marker must NOT make the
     re-run install the partials twice. Both worst-point states re-heal
@@ -381,24 +359,20 @@ def test_dsir_staged_install_reheals_every_crash_point(spark, tmp_path, sf_dir):
         _pair_cache_dir,
     )
 
-    spark.conf.set("spark.zylyty.pairCacheDir", str(tmp_path / "pc"))
-    try:
-        want = [tuple(r) for r in curate.dsir_counts_append(spark, sf_dir).collect()]
-        base = Path(_pair_cache_dir(spark, sf_dir, modality="dsir-batch"))
+    want = [tuple(r) for r in curate.dsir_counts_append(spark, sf_dir).collect()]
+    base = Path(_pair_cache_dir(spark, sf_dir, modality="dsir-batch"))
 
-        # crash AFTER the batch rename, BEFORE its marker: data present,
-        # marker gone — the re-run must skip the rewrite (no double count)
-        (base / "_BATCH_READY").unlink()
-        got = [tuple(r) for r in curate.dsir_counts_append(spark, sf_dir).collect()]
-        assert got == want
+    # crash AFTER the batch rename, BEFORE its marker: data present,
+    # marker gone — the re-run must skip the rewrite (no double count)
+    (base / "_BATCH_READY").unlink()
+    got = [tuple(r) for r in curate.dsir_counts_append(spark, sf_dir).collect()]
+    assert got == want
 
-        # crash BEFORE the rename: _next debris, no data dir, no marker —
-        # the re-run overwrites the staging dir and installs once
-        (base / "_BATCH_READY").unlink()
-        shutil.move(base / "batch", base / "batch_next")
-        got = [tuple(r) for r in curate.dsir_counts_append(spark, sf_dir).collect()]
-        assert got == want
-        assert (base / "batch").exists()
-        assert (base / "_BATCH_READY").exists()
-    finally:
-        spark.conf.unset("spark.zylyty.pairCacheDir")
+    # crash BEFORE the rename: _next debris, no data dir, no marker —
+    # the re-run overwrites the staging dir and installs once
+    (base / "_BATCH_READY").unlink()
+    shutil.move(base / "batch", base / "batch_next")
+    got = [tuple(r) for r in curate.dsir_counts_append(spark, sf_dir).collect()]
+    assert got == want
+    assert (base / "batch").exists()
+    assert (base / "_BATCH_READY").exists()

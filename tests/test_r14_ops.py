@@ -12,7 +12,6 @@ import shutil
 import sys
 from pathlib import Path
 
-import pytest
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 
@@ -32,13 +31,6 @@ def _plan(df) -> str:
     return buf.getvalue()
 
 
-@pytest.fixture()
-def store_root(spark, tmp_path):
-    spark.conf.set("spark.zylyty.pairCacheDir", str(tmp_path / "pc"))
-    yield str(tmp_path / "pc")
-    spark.conf.unset("spark.zylyty.pairCacheDir")
-
-
 class TestContamIndexStore:
     """The persisted eval-window universe: probes serve from it
     hash-unchanged, appends are additive installments (≡ rebuild), and
@@ -46,7 +38,7 @@ class TestContamIndexStore:
     hashes still contributed by surviving releases."""
 
     def test_excise_is_store_served_no_eval_recompute(
-        self, spark, store_root, sf_dir
+        self, spark, artifact_roots, sf_dir
     ):
         plan = _plan(text.text_contamination_excise(spark, sf_dir))
         assert "universe" in plan, f"probe not store-served:\n{plan}"
@@ -55,7 +47,7 @@ class TestContamIndexStore:
         assert plan.count("documents.parquet") == 2, plan
 
     def test_store_served_excise_equals_in_plan_kernel(
-        self, spark, store_root, sf_dir
+        self, spark, artifact_roots, sf_dir
     ):
         from zylyty_data_engineer_challenge_spark.catalog import load_table
 
@@ -71,7 +63,7 @@ class TestContamIndexStore:
         ]
         assert got == want
 
-    def test_append_equals_rebuild(self, spark, store_root, sf_dir):
+    def test_append_equals_rebuild(self, spark, artifact_roots, sf_dir):
         got = [
             tuple(r) for r in text.contam_index_append(spark, sf_dir).collect()
         ]
@@ -80,7 +72,7 @@ class TestContamIndexStore:
         ]
         assert got == want
 
-    def test_forget_drops_only_net_zero_hashes(self, spark, store_root, sf_dir):
+    def test_forget_drops_only_net_zero_hashes(self, spark, artifact_roots, sf_dir):
         """The surviving universe after retraction == the universe built
         on the surviving eval docs alone (count algebra, not hash
         deletion), and the re-excision it returns == the excision the
@@ -108,7 +100,7 @@ class TestContamIndexStore:
         ]
         assert got == want
 
-    def test_retraction_is_observable(self, spark, store_root, sf_dir):
+    def test_retraction_is_observable(self, spark, artifact_roots, sf_dir):
         """The retracted release must actually change the excision at
         fixture scale — otherwise the forget differential degenerates to
         the plain excise and proves nothing (CONTAM_RETRACT_MOD is
@@ -163,7 +155,7 @@ class TestContamIndexStore:
         assert h_passage in surviving  # co-owned: must survive
         assert h_other not in surviving  # sole-owned by retracted: must drop
 
-    def test_compact_single_file_same_universe(self, spark, store_root, sf_dir):
+    def test_compact_single_file_same_universe(self, spark, artifact_roots, sf_dir):
         """contam_index_compact: one parquet data file, and the
         compacted universe is element-equal to the append path's
         read-time merge (pure layout change; same oracle — the
@@ -198,7 +190,7 @@ class TestContamIndexStore:
         assert got == [tuple(r) for r in want]
 
     def test_compact_recompacts_after_late_installment(
-        self, spark, store_root, sf_dir
+        self, spark, artifact_roots, sf_dir
     ):
         from zylyty_data_engineer_challenge_spark.operators.dedup import (
             _pair_cache_dir,
@@ -216,7 +208,7 @@ class TestContamIndexStore:
         assert before != after
         assert ("f" * 32, 7) in set(after)
 
-    def test_v2_gate_is_store_served(self, spark, store_root, sf_dir):
+    def test_v2_gate_is_store_served(self, spark, artifact_roots, sf_dir):
         plan = _plan(curate.pipeline_curate_v2(spark, sf_dir))
         assert "universe" in plan, f"v2 gate not store-served:\n{plan}"
         assert "LessThan(doc_id,20)" not in plan, plan
@@ -271,7 +263,7 @@ class TestCompactionManifest:
     a compaction triggers a re-compact instead of serving stale
     counts."""
 
-    def test_late_installment_recompacts(self, spark, store_root, sf_dir):
+    def test_late_installment_recompacts(self, spark, artifact_roots, sf_dir):
         from zylyty_data_engineer_challenge_spark.operators.dedup import (
             _pair_cache_dir,
         )
@@ -296,7 +288,7 @@ class TestCompactionManifest:
         assert set(after) == want
 
     def test_installment_discovery_excludes_compact_output(
-        self, spark, store_root, sf_dir
+        self, spark, artifact_roots, sf_dir
     ):
         from zylyty_data_engineer_challenge_spark.operators.dedup import (
             _pair_cache_dir,
@@ -421,7 +413,7 @@ class TestBpeVocabStore:
     BPE-budget packing serve the vocab from the store — training never
     rides the serve path (the MRL codebook lesson)."""
 
-    def test_stored_vocab_equals_trained(self, spark, store_root, sf_dir):
+    def test_stored_vocab_equals_trained(self, spark, artifact_roots, sf_dir):
         base = text.build_bpe_vocab(spark, sf_dir)
         stored = spark.read.parquet(f"{base}/vocab")
         _, trained = text._bpe_trained(spark, sf_dir)
@@ -429,7 +421,7 @@ class TestBpeVocabStore:
         assert trained.exceptAll(stored).count() == 0
 
     def test_apply_is_store_served_and_hash_stable(
-        self, spark, store_root, sf_dir
+        self, spark, artifact_roots, sf_dir
     ):
         df = text.text_bpe_apply(spark, sf_dir)
         plan = _plan(df)
@@ -448,7 +440,7 @@ class TestBpeVocabStore:
         got = [tuple(r) for r in df.collect()]
         assert got == [tuple(r) for r in want]
 
-    def test_pack_bpe_plan_has_no_trainer(self, spark, store_root, sf_dir):
+    def test_pack_bpe_plan_has_no_trainer(self, spark, artifact_roots, sf_dir):
         plan = _plan(curate.curate_pack_bpe(spark, sf_dir))
         assert "vocab" in plan, plan
         assert "TakeOrdered" not in plan, plan
@@ -558,56 +550,52 @@ class TestMrlResumeReadsStoredCodebook:
     the rebuilt prefixes follow the perturbation."""
 
     def test_prefix_rebuild_follows_stored_centroids(
-        self, spark, tmp_path, sf_dir
+        self, spark, sf_dir, artifact_roots
     ):
-        spark.conf.set("spark.zylyty.annIndexDir", str(tmp_path / "ann"))
-        try:
-            base = similarity.build_mrl_store(spark, sf_dir)
-            original = {
-                (r["vec_id"], r["cid"])
-                for r in spark.read.parquet(f"{base}/mrl_prefix")
-                .select("vec_id", "cid")
-                .collect()
-            }
-            cents = spark.read.parquet(f"{base}/mrl_centroids")
-            # perturb: push centroid 0 far away so assignments change
-            moved = cents.select(
-                "cid",
-                F.when(
-                    F.col("cid") == 0,
-                    F.expr("transform(cq, x -> x + 100000)"),
-                )
-                .otherwise(F.col("cq"))
-                .alias("cq"),
+        base = similarity.build_mrl_store(spark, sf_dir)
+        original = {
+            (r["vec_id"], r["cid"])
+            for r in spark.read.parquet(f"{base}/mrl_prefix")
+            .select("vec_id", "cid")
+            .collect()
+        }
+        cents = spark.read.parquet(f"{base}/mrl_centroids")
+        # perturb: push centroid 0 far away so assignments change
+        moved = cents.select(
+            "cid",
+            F.when(
+                F.col("cid") == 0,
+                F.expr("transform(cq, x -> x + 100000)"),
             )
-            moved_rows = moved.collect()  # materialize BEFORE overwrite
-            moved = spark.createDataFrame(moved_rows, schema=moved.schema)
-            moved.write.mode("overwrite").parquet(f"{base}/mrl_centroids")
-            shutil.rmtree(f"{base}/mrl_prefix")
-            Path(f"{base}/_MRL_READY").unlink()
-            similarity.build_mrl_store(spark, sf_dir)
+            .otherwise(F.col("cq"))
+            .alias("cq"),
+        )
+        moved_rows = moved.collect()  # materialize BEFORE overwrite
+        moved = spark.createDataFrame(moved_rows, schema=moved.schema)
+        moved.write.mode("overwrite").parquet(f"{base}/mrl_centroids")
+        shutil.rmtree(f"{base}/mrl_prefix")
+        Path(f"{base}/_MRL_READY").unlink()
+        similarity.build_mrl_store(spark, sf_dir)
 
-            got = {
-                (r["vec_id"], r["cid"])
-                for r in spark.read.parquet(f"{base}/mrl_prefix")
-                .select("vec_id", "cid")
-                .collect()
-            }
-            corpus = similarity._quantized(spark, sf_dir).filter(
-                F.col("vec_id") >= similarity.N_QUERIES
-            )
-            want = {
-                (r["vec_id"], r["cid"])
-                for r in similarity._l2_nearest_lists(
-                    spark.createDataFrame(moved_rows, schema=moved.schema),
-                    corpus.select("vec_id", "q"),
-                    "vec_id",
-                    1,
-                ).collect()
-            }
-            assert got == want
-            # the perturbation must actually move assignments, or the
-            # pin passes vacuously
-            assert got != original
-        finally:
-            spark.conf.unset("spark.zylyty.annIndexDir")
+        got = {
+            (r["vec_id"], r["cid"])
+            for r in spark.read.parquet(f"{base}/mrl_prefix")
+            .select("vec_id", "cid")
+            .collect()
+        }
+        corpus = similarity._quantized(spark, sf_dir).filter(
+            F.col("vec_id") >= similarity.N_QUERIES
+        )
+        want = {
+            (r["vec_id"], r["cid"])
+            for r in similarity._l2_nearest_lists(
+                spark.createDataFrame(moved_rows, schema=moved.schema),
+                corpus.select("vec_id", "q"),
+                "vec_id",
+                1,
+            ).collect()
+        }
+        assert got == want
+        # the perturbation must actually move assignments, or the
+        # pin passes vacuously
+        assert got != original

@@ -28,15 +28,6 @@ import pytest
 from zylyty_data_engineer_challenge_spark.operators import dedup, multimodal
 
 
-@pytest.fixture()
-def pair_cache(spark, tmp_path):
-    spark.conf.set("spark.zylyty.pairCacheDir", str(tmp_path / "pair_cache"))
-    try:
-        yield str(tmp_path / "pair_cache")
-    finally:
-        spark.conf.unset("spark.zylyty.pairCacheDir")
-
-
 def _physical_plan(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
@@ -44,7 +35,7 @@ def _physical_plan(df) -> str:
 DECODE_MARKERS = ("MapInPandas", "ArrowEvalPython", "BatchEvalPython")
 
 
-def test_phash_store_zero_decodes_after_build(spark, sf_dir, pair_cache):
+def test_phash_store_zero_decodes_after_build(spark, sf_dir, artifact_roots):
     """First consumer builds the store; from then on the probe, the pair
     enumeration, and the band table itself must carry NO Python decode
     stage in their plans — the whole point of r9 VERDICT item 1."""
@@ -62,7 +53,7 @@ def test_phash_store_zero_decodes_after_build(spark, sf_dir, pair_cache):
         assert "FileScan parquet" in plan
 
 
-def test_afp_store_zero_decodes_after_build(spark, sf_dir, pair_cache):
+def test_afp_store_zero_decodes_after_build(spark, sf_dir, artifact_roots):
     multimodal.afp_signatures_cached(spark, sf_dir).count()  # builds
 
     base = dedup._pair_cache_dir(spark, sf_dir, modality="audio")
@@ -77,7 +68,7 @@ def test_afp_store_zero_decodes_after_build(spark, sf_dir, pair_cache):
         assert "FileScan parquet" in plan
 
 
-def test_store_served_pairs_equal_fresh_compute(spark, sf_dir, pair_cache):
+def test_store_served_pairs_equal_fresh_compute(spark, sf_dir, artifact_roots):
     """The persisted signatures must reproduce a fresh in-plan compute
     bit-for-bit — pin by comparing the store-served pair rows against
     pairs built directly from a live _phash_sig_compute pass."""
@@ -110,7 +101,7 @@ def test_store_served_pairs_equal_fresh_compute(spark, sf_dir, pair_cache):
     ],
 )
 def test_mm_append_equals_rebuild_and_idempotent(
-    spark, sf_dir, pair_cache, append_fn, dedup_fn, modality
+    spark, sf_dir, artifact_roots, append_fn, dedup_fn, modality
 ):
     """append ≡ full rebuild on the union corpus, and a re-run is a
     no-op read (the dedup_minhash_append contract, items 3)."""
@@ -121,7 +112,7 @@ def test_mm_append_equals_rebuild_and_idempotent(
     assert second == first, f"{modality}: re-run must not re-append"
 
 
-def test_pairs_compact_one_file_per_bucket_and_equal(spark, sf_dir, pair_cache):
+def test_pairs_compact_one_file_per_bucket_and_equal(spark, sf_dir, artifact_roots):
     """Compaction is a pure layout change: one parquet file per bucket
     partition, identical pair rows before and after (item 4)."""
     before = sorted(
@@ -131,7 +122,7 @@ def test_pairs_compact_one_file_per_bucket_and_equal(spark, sf_dir, pair_cache):
     after = sorted(tuple(r) for r in compacted_df.collect())
     assert after == before, "compaction must not change the pair set"
 
-    base = dedup._append_store_dir(spark, sf_dir)
+    base = dedup._pair_cache_dir(spark, sf_dir, modality="append-base")
     files = [
         f
         for f in compacted_df.inputFiles()
@@ -157,7 +148,7 @@ def test_pairs_compact_one_file_per_bucket_and_equal(spark, sf_dir, pair_cache):
     ],
 )
 def test_mm_stream_append_equals_rebuild_and_exactly_once(
-    spark, sf_dir, pair_cache, stream_fn, dedup_fn, modality
+    spark, sf_dir, artifact_roots, stream_fn, dedup_fn, modality
 ):
     """The streamed signature store (assembled across THREE micro-
     batches) must hash-equal the full rebuild, and a re-trigger must
@@ -176,7 +167,7 @@ def test_mm_stream_append_equals_rebuild_and_exactly_once(
     assert second == first, f"{modality}: re-trigger duplicated pairs"
 
 
-def test_mm_forget_physically_purges_and_is_idempotent(spark, sf_dir, pair_cache):
+def test_mm_forget_physically_purges_and_is_idempotent(spark, sf_dir, artifact_roots):
     """The image/audio takedown (r11): after the purge no revoked doc_id
     may physically survive in either the signature or pair parquet, and a
     re-run is a pure store read (marker idempotency)."""
@@ -216,7 +207,7 @@ def test_mm_forget_physically_purges_and_is_idempotent(spark, sf_dir, pair_cache
 
 
 def test_labels_forget_physically_purges_and_matches_frozen_assignment(
-    spark, sf_dir, pair_cache
+    spark, sf_dir, artifact_roots
 ):
     """The Lloyd label-store takedown (r11): zero revoked vec_ids survive
     in the stored parquet, survivors' labels equal the frozen-centroid
@@ -250,7 +241,7 @@ def test_labels_forget_physically_purges_and_matches_frozen_assignment(
     assert sorted(tuple(r) for r in stored) == sorted(want)
 
 
-def test_cluster_labels_append_equals_single_shot_train(spark, sf_dir, pair_cache):
+def test_cluster_labels_append_equals_single_shot_train(spark, sf_dir, artifact_roots):
     """cluster_labels_append (r12): the two-installment frozen-centroid
     store must be byte-identical to kmeans_lloyd's single-shot full
     assignment (assignment is per-vector deterministic given the stored

@@ -30,7 +30,10 @@ from pyspark.sql import functions as F
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
-from zylyty_data_engineer_challenge_spark.catalog import load_table  # noqa: E402
+from zylyty_data_engineer_challenge_spark.catalog import (  # noqa: E402
+    load_table,
+    point_artifact_roots,
+)
 from zylyty_data_engineer_challenge_spark.session import get_spark  # noqa: E402
 
 BASE = "/root/testdata/sf0.1"
@@ -368,15 +371,7 @@ def x100_main() -> int:
     # run both scales execute the same cold-then-warm sequence (build
     # cold -> probe warm; dedup_cc cold -> curate_policy over the warm
     # pair cache), which is the production shape.
-    artifact_root = tempfile.mkdtemp(prefix="zylyty_x100_artifacts_")
-    for conf in (
-        "spark.zylyty.pairCacheDir",
-        "spark.zylyty.annIndexDir",
-        "spark.zylyty.formatDir",
-        "spark.zylyty.streamSinkDir",
-        "spark.zylyty.streamLateDir",
-    ):
-        spark.conf.set(conf, f"{artifact_root}/{conf.rsplit('.', 1)[-1]}")
+    point_artifact_roots(spark, tempfile.mkdtemp(prefix="zylyty_x100_artifacts_"))
 
     subset = [a for a in sys.argv[1:] if not a.startswith("--")] or X100_QUERIES
     out = {"x10_wall": {}, "x100_wall": {}, "exponent": {}, "n_rows": {}}
@@ -618,9 +613,7 @@ def r16exp_main() -> int:
         build(spark)
     if "--rebuild" in sys.argv or not (OUT100 / "documents.parquet").exists():
         build_x100(spark)
-    root = tempfile.mkdtemp(prefix="zylyty_r16exp_artifacts_")
-    for conf in ("spark.zylyty.pairCacheDir", "spark.zylyty.annIndexDir"):
-        spark.conf.set(conf, f"{root}/{conf.rsplit('.', 1)[-1]}")
+    point_artifact_roots(spark, tempfile.mkdtemp(prefix="zylyty_r16exp_artifacts_"))
 
     def best2(name, sfdir):
         best = None

@@ -9,7 +9,9 @@ materializes data on the driver.
 
 from __future__ import annotations
 
+import hashlib
 import os
+import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -150,10 +152,10 @@ def _sniff_events_ts(events_path: str, spark: SparkSession | None) -> bool:
 
 
 def hadoop_fs(spark: SparkSession, path: str):
-    """(FileSystem, Path) for any scheme — local file paths and hdfs/s3a
-    resolve through the same API, so existence checks and marker writes
-    work identically on a laptop and a cluster. Shared by every durable
-    artifact (ANN index, format migrations, near-dup pair cache)."""
+    """``(FileSystem, Path)`` for ``path`` under any scheme. Local paths
+    and hdfs/s3a paths resolve through the same Hadoop API, so existence
+    checks and marker writes behave the same on a laptop and a cluster.
+    The durable-artifact stores check and write their ready markers with it."""
     jvm = spark._jvm
     hpath = jvm.org.apache.hadoop.fs.Path(path)
     return hpath.getFileSystem(spark._jsc.hadoopConfiguration()), hpath
@@ -206,25 +208,30 @@ def swap_subtrees(spark: SparkSession, base: str, names) -> None:
 
 
 def source_identity(spark: SparkSession, src: str) -> str:
-    """Content identity of a source path: ``path:mtime:size:nfiles``.
+    """Content identity of a source path.
 
-    Local paths resolve through ``os.stat``; anything that is not
-    driver-statable (hdfs://, s3a://, or any scheme the local OS can't
-    see) resolves through the Hadoop FileSystem API instead — content
-    summary length + file count + max file modification time over a
-    RECURSIVE listing (a regenerated source whose churn is confined to
-    nested subdirectories would keep unchanged top-level mtimes) — so a
-    REGENERATED remote source at the same path still changes identity.
-    Used to key every durable artifact derived from a source (stream
-    sinks/checkpoints, persisted ANN indexes) so stale state can never be
-    reused against regenerated data, while unchanged data reuses it by
-    construction.
+    A local file is ``path:mtime_ns:size``. A local directory is
+    ``path:mtime_ns:size:nfiles`` over its whole tree: the newest mtime of
+    the directory and of every file below it, the total file size and the
+    file count, so a file rewritten inside a nested partition changes it.
+    A path the local OS cannot stat (hdfs://, s3a://, any other remote
+    scheme) resolves through the Hadoop FileSystem API by the same
+    rule, with mtimes in milliseconds. :func:`artifact_dir` keys every
+    durable artifact by it, so a regenerated source gets a fresh artifact
+    and an unchanged source reuses the one already built.
     """
-    try:
+    if os.path.isfile(src):
         st = os.stat(src)
         return f"{src}:{st.st_mtime_ns}:{st.st_size}"
-    except OSError:
-        pass
+    if os.path.isdir(src):
+        mtime, size, nfiles = os.stat(src).st_mtime_ns, 0, 0
+        for dirpath, _, files in os.walk(src):
+            for name in files:
+                fst = os.stat(os.path.join(dirpath, name))
+                mtime = max(mtime, fst.st_mtime_ns)
+                size += fst.st_size
+                nfiles += 1
+        return f"{src}:{mtime}:{size}:{nfiles}"
     # remote path: ask the filesystem that will actually serve the reads
     fs, hpath = hadoop_fs(spark, src)
     status = fs.getFileStatus(hpath)
@@ -240,6 +247,51 @@ def source_identity(spark: SparkSession, src: str) -> str:
     size = status.getLen()
     mtime = status.getModificationTime()
     return f"{src}:{mtime}:{size}"
+
+
+# The durable-artifact roots: conf ``spark.zylyty.<name>``, else the env
+# var, else ``<tempdir>/<default>``. streamLateDir shares the sink's env var.
+ARTIFACT_ROOTS = {
+    "pairCacheDir": ("SPARK_GRAFT_PAIR_CACHE_DIR", "zylyty_pair_cache"),
+    "streamSinkDir": ("SPARK_GRAFT_STREAM_SINK_DIR", "zylyty_stream_sink"),
+    "streamLateDir": ("SPARK_GRAFT_STREAM_SINK_DIR", "zylyty_stream_late"),
+    "annIndexDir": ("SPARK_GRAFT_ANN_INDEX_DIR", "zylyty_ann_index"),
+    "formatDir": ("SPARK_GRAFT_FORMAT_DIR", "zylyty_formats"),
+}
+
+
+def artifact_dir(
+    spark: SparkSession, root: str, sources: list[str], tag: str = ""
+) -> str:
+    """Directory of one durable artifact: ``<root location>/<key>``.
+
+    ``root`` names an :data:`ARTIFACT_ROOTS` entry. Its location is the
+    session conf ``spark.zylyty.<root>``, else the entry's env var, else
+    the entry's default under the system tempdir; on a cluster it is a
+    shared filesystem every executor can write. The key is the first 16
+    hex digits of the sha1 of ``tag`` and the :func:`source_identity` of
+    each source path, joined by ``:`` (an empty tag is left out). A
+    regenerated source or a new version tag gets a fresh directory.
+    Callers add their own sub-path.
+    """
+    env, default = ARTIFACT_ROOTS[root]
+    base = (
+        spark.conf.get(f"spark.zylyty.{root}", None)
+        or os.environ.get(env)
+        or os.path.join(tempfile.gettempdir(), default)
+    )
+    parts = ([tag] if tag else []) + [source_identity(spark, s) for s in sources]
+    return f"{base}/{hashlib.sha1(':'.join(parts).encode()).hexdigest()[:16]}"
+
+
+def point_artifact_roots(spark: SparkSession, base: str | None) -> None:
+    """Set every artifact root's conf to ``<base>/<name>``, so a run owns
+    fresh state; ``base=None`` unsets them, back to env var or default."""
+    for name in ARTIFACT_ROOTS:
+        if base is None:
+            spark.conf.unset(f"spark.zylyty.{name}")
+        else:
+            spark.conf.set(f"spark.zylyty.{name}", f"{base}/{name}")
 
 
 def convert_event_ts(df: DataFrame) -> DataFrame:

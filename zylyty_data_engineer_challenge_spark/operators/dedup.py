@@ -29,7 +29,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..catalog import load_table
+from ..catalog import artifact_dir, load_table
 from ..oracle_utils import strip_order_by as _strip_order_by
 
 N_HASHES = 16
@@ -406,64 +406,17 @@ def _pair_cache_dir(
     modality: str = "",
     src: str = "documents.parquet",
 ) -> str:
-    """Durable near-dup pair cache location: root from
-    ``spark.zylyty.pairCacheDir`` conf or ``SPARK_GRAFT_PAIR_CACHE_DIR``
-    env (a shared filesystem on a cluster; tempdir default in local
-    mode), keyed by the SOURCE identity of the modality's input table +
-    layout version — the same contract as the ANN index (:func:`..
-    operators.similarity.build_ann_index`): regenerated data or an
-    algorithm change gets a fresh pair list, unchanged data reuses the
-    detection run.
-
-    ``modality`` namespaces additional detectors (``"emb"`` keyed by
-    embeddings.parquet, ``"phash"`` keyed by documents.parquet); the
-    default empty tag is the original text/minhash cache, whose key is
-    kept byte-identical so pre-existing builds stay valid."""
-    import hashlib
-    import os
-    import tempfile
-
-    from ..catalog import source_identity
-
-    root = spark.conf.get("spark.zylyty.pairCacheDir", None)
-    if not root:
-        root = os.environ.get("SPARK_GRAFT_PAIR_CACHE_DIR") or os.path.join(
-            tempfile.gettempdir(), "zylyty_pair_cache"
-        )
-    ident = source_identity(spark, f"{sf_dir}/{src}")
+    """Directory of a near-dup-derived store under the pair-cache root,
+    keyed by ``src``'s identity and :data:`NEARDUP_PAIRS_VERSION`.
+    ``modality`` namespaces each store (``"emb"``, ``"append-base"``,
+    ``"dsir-counts"``, ...); the empty default is the minhash pair cache."""
     tag = f"{modality}-" if modality else ""
-    key = hashlib.sha1(
-        f"{tag}v{NEARDUP_PAIRS_VERSION}:{ident}".encode()
-    ).hexdigest()[:16]
-    return f"{root}/{key}"
+    return artifact_dir(
+        spark, "pairCacheDir", [f"{sf_dir}/{src}"], f"{tag}v{NEARDUP_PAIRS_VERSION}"
+    )
 
 
 APPEND_MOD = 10  # doc_id % 10 == 0 plays the arriving "daily batch"
-
-
-def _append_store_dir(spark: SparkSession, sf_dir: str) -> str:
-    """The incremental band/pair store's directory (the artifact
-    :func:`dedup_minhash_append` builds and appends into, and
-    :func:`dedup_pairs_compact` maintains) — identity-keyed like
-    :func:`_pair_cache_dir` under its own ``append-base`` namespace,
-    byte-identical to the pre-r10 inline key so existing builds stay
-    valid."""
-    import hashlib
-    import os
-    import tempfile
-
-    from ..catalog import source_identity
-
-    root = spark.conf.get("spark.zylyty.pairCacheDir", None)
-    if not root:
-        root = os.environ.get("SPARK_GRAFT_PAIR_CACHE_DIR") or os.path.join(
-            tempfile.gettempdir(), "zylyty_pair_cache"
-        )
-    ident = source_identity(spark, f"{sf_dir}/documents.parquet")
-    key = hashlib.sha1(
-        f"append-base-v{NEARDUP_PAIRS_VERSION}:{ident}".encode()
-    ).hexdigest()[:16]
-    return f"{root}/{key}"
 
 
 def dedup_minhash_append(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -498,7 +451,7 @@ def dedup_minhash_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     base_docs = docs.filter(~is_new)
     new_docs = docs.filter(is_new)
 
-    base = _append_store_dir(spark, sf_dir)
+    base = _pair_cache_dir(spark, sf_dir, modality="append-base")
     fs, base_marker = hadoop_fs(spark, f"{base}/_BASE_READY")
     if not fs.exists(base_marker):
         _minhash_bands(base_docs).write.mode("overwrite").parquet(f"{base}/bands")
@@ -1120,7 +1073,7 @@ def dedup_pairs_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from ..catalog import hadoop_fs
 
-    base = _append_store_dir(spark, sf_dir)
+    base = _pair_cache_dir(spark, sf_dir, modality="append-base")
     dedup_minhash_append(spark, sf_dir)  # ensure base + append exist
     fs, marker = hadoop_fs(spark, f"{base}/_PAIRS_COMPACT_READY")
     dest = f"{base}/pairs_compact"

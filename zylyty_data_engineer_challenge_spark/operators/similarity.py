@@ -36,7 +36,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..catalog import load_table
+from ..catalog import artifact_dir, load_table
 from ..oracle_utils import strip_order_by as _strip_order_by
 
 QUANT = 1000
@@ -1204,29 +1204,6 @@ def _hadoop_fs(spark: SparkSession, path: str):
     return hadoop_fs(spark, path)
 
 
-def _ann_index_dir(spark: SparkSession, sf_dir: str) -> str:
-    """Durable index location: root from ``spark.zylyty.annIndexDir`` conf
-    or ``SPARK_GRAFT_ANN_INDEX_DIR`` env (a shared filesystem on a
-    cluster; tempdir default in local mode), keyed by the embeddings
-    source identity + index version — the same contract as the streaming
-    sink dirs: regenerated data or a layout change gets a fresh index,
-    unchanged data reuses the build."""
-    import hashlib
-    import os
-    import tempfile
-
-    from ..catalog import source_identity
-
-    root = spark.conf.get("spark.zylyty.annIndexDir", None)
-    if not root:
-        root = os.environ.get("SPARK_GRAFT_ANN_INDEX_DIR") or os.path.join(
-            tempfile.gettempdir(), "zylyty_ann_index"
-        )
-    ident = source_identity(spark, f"{sf_dir}/embeddings.parquet")
-    key = hashlib.sha1(f"v{ANN_INDEX_VERSION}:{ident}".encode()).hexdigest()[:16]
-    return f"{root}/{key}"
-
-
 def build_ann_index(spark: SparkSession, sf_dir: str) -> str:
     """Build and persist the IVF-PQ index of :func:`sim_ann_ivfpq`;
     returns the index directory. Idempotent per source identity: if the
@@ -1251,7 +1228,9 @@ def build_ann_index(spark: SparkSession, sf_dir: str) -> str:
     """
     from .cluster import lloyd_centroids
 
-    base = _ann_index_dir(spark, sf_dir)
+    base = artifact_dir(
+        spark, "annIndexDir", [f"{sf_dir}/embeddings.parquet"], f"v{ANN_INDEX_VERSION}"
+    )
     fs, marker = _hadoop_fs(spark, f"{base}/_INDEX_READY")
     if fs.exists(marker):
         return base
@@ -2582,7 +2561,9 @@ def build_mrl_store(spark: SparkSession, sf_dir: str) -> str:
     store probe does. Returns the store directory."""
     from .cluster import lloyd_centroids
 
-    base = _ann_index_dir(spark, sf_dir)
+    base = artifact_dir(
+        spark, "annIndexDir", [f"{sf_dir}/embeddings.parquet"], f"v{ANN_INDEX_VERSION}"
+    )
     fs, marker = _hadoop_fs(spark, f"{base}/_MRL_READY")
     _, cents_marker = _hadoop_fs(spark, f"{base}/_MRL_CENTS_READY")
     need_prefix = not fs.exists(marker)

@@ -14,7 +14,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..catalog import load_table
+from ..catalog import artifact_dir, load_table
 
 
 def q_scd2_dim(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -738,27 +738,6 @@ ORACLE_SQL["q_table_profile"] = (
 ORACLE_SQL["q_table_profile_approx"] = _table_profile_approx_oracle()
 
 
-def _orc_table_dir(spark: SparkSession, sf_dir: str) -> str:
-    """Durable ORC copy location, identity-keyed like every derived
-    artifact (stream sinks, ANN indexes): conf ``spark.zylyty.formatDir``
-    or env ``SPARK_GRAFT_FORMAT_DIR`` root, fresh key when the source
-    regenerates."""
-    import hashlib
-    import os
-    import tempfile
-
-    from ..catalog import source_identity
-
-    root = spark.conf.get("spark.zylyty.formatDir", None)
-    if not root:
-        root = os.environ.get("SPARK_GRAFT_FORMAT_DIR") or os.path.join(
-            tempfile.gettempdir(), "zylyty_formats"
-        )
-    ident = source_identity(spark, f"{sf_dir}/lineitem.parquet")
-    key = hashlib.sha1(f"orc:{ident}".encode()).hexdigest()[:16]
-    return f"{root}/{key}/lineitem_orc"
-
-
 def q_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Format breadth: the lineitem projection written to ORC (Spark's
     second native columnar format) and read back through a FILTERED scan,
@@ -778,7 +757,8 @@ def q_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from ..catalog import artifact_ready
 
-    dest = _orc_table_dir(spark, sf_dir)
+    dest = artifact_dir(spark, "formatDir", [f"{sf_dir}/lineitem.parquet"], "orc")
+    dest += "/lineitem_orc"
     # Hadoop-FS existence check (not os.path.exists): with a remote
     # formatDir / cluster defaultFS a driver-local stat never sees the
     # marker and the one-time migration degrades to a rewrite per call.
@@ -837,24 +817,12 @@ def q_jsonl_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     filters post-parse), which is exactly why bronze data lands in
     parquet/ORC and JSONL stays an interchange format.
     """
-    import hashlib
-    import os
-    import tempfile
-
     from pyspark.sql import types as T
 
-    from ..catalog import source_identity
-
-    root = spark.conf.get("spark.zylyty.formatDir", None)
-    if not root:
-        root = os.environ.get("SPARK_GRAFT_FORMAT_DIR") or os.path.join(
-            tempfile.gettempdir(), "zylyty_formats"
-        )
     from ..catalog import artifact_ready
 
-    ident = source_identity(spark, f"{sf_dir}/orders.parquet")
-    key = hashlib.sha1(f"jsonl:{ident}".encode()).hexdigest()[:16]
-    dest = f"{root}/{key}/orders_jsonl"
+    dest = artifact_dir(spark, "formatDir", [f"{sf_dir}/orders.parquet"], "jsonl")
+    dest += "/orders_jsonl"
     # same remote-safe marker check as q_orc_roundtrip / the ANN index
     if not artifact_ready(spark, f"{dest}/_SUCCESS"):
         (
@@ -1304,23 +1272,6 @@ def _morton_py(x: int, y: int) -> int:
     return z
 
 
-def _zorder_store_dir(spark: SparkSession, sf_dir: str) -> str:
-    import hashlib
-    import os
-    import tempfile
-
-    from ..catalog import source_identity
-
-    root = spark.conf.get("spark.zylyty.formatDir", None)
-    if not root:
-        root = os.environ.get("SPARK_GRAFT_FORMAT_DIR") or os.path.join(
-            tempfile.gettempdir(), "zylyty_formats"
-        )
-    ident = source_identity(spark, f"{sf_dir}/orders.parquet")
-    key = hashlib.sha1(f"zorder:{ident}".encode()).hexdigest()[:16]
-    return f"{root}/{key}/orders_zorder"
-
-
 def q_zorder_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The READ side of :func:`q_zorder_layout` — the data-skipping query
     the clustered layout exists for: orders are written ONCE per source
@@ -1343,7 +1294,8 @@ def q_zorder_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from ..catalog import hadoop_fs
 
-    base = _zorder_store_dir(spark, sf_dir)
+    base = artifact_dir(spark, "formatDir", [f"{sf_dir}/orders.parquet"], "zorder")
+    base += "/orders_zorder"
     fs, marker = hadoop_fs(spark, f"{base}/_ZORDER_READY")
     if not fs.exists(marker):
         orders = load_table(spark, sf_dir, "orders")

@@ -28,25 +28,12 @@ snapshot.
 
 from __future__ import annotations
 
-import hashlib
-import os
-import tempfile
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..queries.warehouse import ORACLE_SQL as _WAREHOUSE_ORACLE
 
 CDC_STREAM_VERSION = 1
-
-
-def _work_root(spark: SparkSession) -> str:
-    root = spark.conf.get("spark.zylyty.pairCacheDir", None)
-    if not root:
-        root = os.environ.get("SPARK_GRAFT_PAIR_CACHE_DIR") or os.path.join(
-            tempfile.gettempdir(), "zylyty_pair_cache"
-        )
-    return root
 
 
 def _latest_per_key(changes: DataFrame) -> DataFrame:
@@ -178,15 +165,15 @@ def stream_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     identity-keyed work dir (regenerated sources get a fresh snapshot
     chain AND a fresh checkpoint log), re-trigger appends nothing
     (pinned by test). Result is hash-equal to batch ``q_cdc_apply``."""
-    from ..catalog import load_table, source_identity
+    from ..catalog import artifact_dir, load_table
     from .views_stream import _stream_events
 
-    ident = source_identity(spark, f"{sf_dir}/events.parquet")
-    base_ident = source_identity(spark, f"{sf_dir}/customer.parquet")
-    key = hashlib.sha1(
-        f"cdc-v{CDC_STREAM_VERSION}:{ident}:{base_ident}".encode()
-    ).hexdigest()[:16]
-    work_dir = f"{_work_root(spark)}/{key}"
+    work_dir = artifact_dir(
+        spark,
+        "pairCacheDir",
+        [f"{sf_dir}/events.parquet", f"{sf_dir}/customer.parquet"],
+        f"cdc-v{CDC_STREAM_VERSION}",
+    )
     base = load_table(spark, sf_dir, "customer").select("c_custkey")
     return cdc_apply_stream(spark, _stream_events(spark, sf_dir), base, work_dir)
 

@@ -130,7 +130,7 @@ def stream_dedup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     join + output-bounded verify; this is what continuous corpus
     ingestion actually runs, with the batch cadence set by the trigger.
     """
-    from ..catalog import hadoop_fs, load_table, source_identity
+    from ..catalog import artifact_dir, hadoop_fs, load_table
     from ..operators.dedup import (
         NEARDUP_PAIRS_VERSION,
         _band_candidates_sym,
@@ -140,20 +140,12 @@ def stream_dedup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..schemas import DOCUMENTS
     from .views_stream import _stream_conf
 
-    import hashlib
-    import os
-    import tempfile
-
-    root = spark.conf.get("spark.zylyty.pairCacheDir", None)
-    if not root:
-        root = os.environ.get("SPARK_GRAFT_PAIR_CACHE_DIR") or os.path.join(
-            tempfile.gettempdir(), "zylyty_pair_cache"
-        )
-    ident = source_identity(spark, f"{sf_dir}/documents.parquet")
-    key = hashlib.sha1(
-        f"stream-v{NEARDUP_PAIRS_VERSION}:{ident}".encode()
-    ).hexdigest()[:16]
-    base = f"{root}/{key}"
+    base = artifact_dir(
+        spark,
+        "pairCacheDir",
+        [f"{sf_dir}/documents.parquet"],
+        f"stream-v{NEARDUP_PAIRS_VERSION}",
+    )
     fs, bands_dir = hadoop_fs(spark, f"{base}/bands")
     docs_static = load_table(spark, sf_dir, "documents")
 

@@ -36,32 +36,12 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..catalog import load_table
+from ..catalog import artifact_dir, load_table
 from .views_stream import _stream_conf
 
 LATE_DELAY = "10 minutes"
 LATE_DELAY_US = 600_000_000
 HOUR_US = 3_600_000_000
-
-
-def _late_input_dir(spark: SparkSession, sf_dir: str) -> str:
-    """Stable two-file stream-input dir keyed by source identity (same
-    contract and identity resolver as views_stream._stream_sink_dirs):
-    re-runs against unchanged data reuse the layout; a regenerated fixture
-    — local or remote — gets a fresh one."""
-    import hashlib
-    import tempfile
-
-    from .views_stream import _source_identity
-
-    root = spark.conf.get("spark.zylyty.streamLateDir", None)
-    if not root:
-        root = os.environ.get("SPARK_GRAFT_STREAM_SINK_DIR") or os.path.join(
-            tempfile.gettempdir(), "zylyty_stream_late"
-        )
-    ident = _source_identity(spark, f"{sf_dir}/events.parquet")
-    key = hashlib.sha1(ident.encode()).hexdigest()[:16]
-    return f"{root}/{key}"
 
 
 def _write_single_file(df: DataFrame, tmp_dir: str, dest: str) -> None:
@@ -88,7 +68,7 @@ def stream_watermark_canary(spark: SparkSession, sf_dir: str) -> DataFrame:
     with_cut = ev.crossJoin(F.broadcast(bounds)).withColumn(
         "us", F.expr("unix_micros(ts)")
     )
-    base = _late_input_dir(spark, sf_dir)
+    base = artifact_dir(spark, "streamLateDir", [f"{sf_dir}/events.parquet"])
     in_dir = os.path.join(base, "input")
     marker = os.path.join(base, "_ready")
     if not os.path.exists(marker):

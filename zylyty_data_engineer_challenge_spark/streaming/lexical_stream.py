@@ -27,26 +27,24 @@ same honesty note as every append twin in this repo.
 
 from __future__ import annotations
 
-import hashlib
-
 from pyspark.sql import DataFrame, SparkSession
 
 from ..operators.lexical import LEXICAL_INDEX_VERSION, _index_tables, _probe_lexical
-from .mm_stream import _store_root
 
 
 def stream_bm25_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Assemble the lexical index across three micro-batches, then serve
     the benchmark query from the streamed store."""
-    from ..catalog import hadoop_fs, source_identity
+    from ..catalog import artifact_dir, hadoop_fs
     from ..schemas import DOCUMENTS
     from .views_stream import _stream_conf
 
-    ident = source_identity(spark, f"{sf_dir}/documents.parquet")
-    key = hashlib.sha1(
-        f"stream-bm25-v{LEXICAL_INDEX_VERSION}:{ident}".encode()
-    ).hexdigest()[:16]
-    base = f"{_store_root(spark)}/{key}"
+    base = artifact_dir(
+        spark,
+        "pairCacheDir",
+        [f"{sf_dir}/documents.parquet"],
+        f"stream-bm25-v{LEXICAL_INDEX_VERSION}",
+    )
     fs, staged = hadoop_fs(spark, f"{base}/_INCOMING_READY")
 
     # stage the corpus as THREE files once per identity, so the stream

@@ -28,8 +28,6 @@ therefore the full pair set with no repeats.
 
 from __future__ import annotations
 
-import hashlib
-
 from pyspark.sql import DataFrame, SparkSession
 
 from ..operators.multimodal import (
@@ -44,18 +42,6 @@ from ..operators.multimodal import (
 )
 
 MM_STREAM_VERSION = 1
-
-
-def _store_root(spark: SparkSession) -> str:
-    import os
-    import tempfile
-
-    root = spark.conf.get("spark.zylyty.pairCacheDir", None)
-    if not root:
-        root = os.environ.get("SPARK_GRAFT_PAIR_CACHE_DIR") or os.path.join(
-            tempfile.gettempdir(), "zylyty_pair_cache"
-        )
-    return root
 
 
 def _mm_stream_append(
@@ -80,15 +66,16 @@ def _mm_stream_append(
     bucket join with output-bounded verify — continuous media ingestion
     at whatever cadence the trigger sets, never corpus x corpus.
     """
-    from ..catalog import hadoop_fs, source_identity
+    from ..catalog import artifact_dir, hadoop_fs
     from ..schemas import DOCUMENTS
     from .views_stream import _stream_conf
 
-    ident = source_identity(spark, f"{sf_dir}/documents.parquet")
-    key = hashlib.sha1(
-        f"stream-{modality}-v{MM_STREAM_VERSION}:{ident}".encode()
-    ).hexdigest()[:16]
-    base = f"{_store_root(spark)}/{key}"
+    base = artifact_dir(
+        spark,
+        "pairCacheDir",
+        [f"{sf_dir}/documents.parquet"],
+        f"stream-{modality}-v{MM_STREAM_VERSION}",
+    )
     fs, sigs_dir = hadoop_fs(spark, f"{base}/sigs")
 
     # stage the corpus as THREE files once per identity, so the stream

@@ -27,7 +27,12 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..catalog import convert_event_ts, events_ts_is_nanos, load_table
+from ..catalog import (
+    artifact_dir,
+    convert_event_ts,
+    events_ts_is_nanos,
+    load_table,
+)
 from ..schemas import EVENTS, EVENTS_RAW
 
 WATERMARK = "1 hour"
@@ -288,40 +293,6 @@ ORACLE_SQL["stream_session_window"] = """
 """
 
 
-# shared identity resolver (r8: generalized to every durable derived
-# artifact — stream sinks here, persisted ANN indexes in .similarity);
-# kept under the old private name because tests and late_stream import it
-from ..catalog import source_identity as _source_identity  # noqa: E402
-
-
-def _stream_sink_dirs(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
-    """Resolve the bronze sink's (data, checkpoint) locations.
-
-    The root comes from ``spark.zylyty.streamSinkDir`` (session conf) or
-    ``SPARK_GRAFT_STREAM_SINK_DIR`` (env) — on a cluster this is a shared
-    filesystem (hdfs://, s3a://) every executor can write; the local-mode
-    default is a stable dir under the system tempdir. Under the root, runs
-    are keyed by the source's identity (:func:`_source_identity` — path +
-    mtime + size, resolved through the Hadoop FS API when the path is not
-    driver-statable) — so a regenerated fixture at the same path gets a
-    fresh sink+checkpoint instead of a stale commit log silently skipping
-    the new data, while re-runs against unchanged data reuse the
-    checkpoint and demonstrate exactly-once across restarts.
-    """
-    import hashlib
-    import os
-    import tempfile
-
-    root = spark.conf.get("spark.zylyty.streamSinkDir", None)
-    if not root:
-        root = os.environ.get("SPARK_GRAFT_STREAM_SINK_DIR") or os.path.join(
-            tempfile.gettempdir(), "zylyty_stream_sink"
-        )
-    ident = _source_identity(spark, f"{sf_dir}/events.parquet")
-    key = hashlib.sha1(ident.encode()).hexdigest()[:16]
-    return f"{root}/{key}/data", f"{root}/{key}/chk"
-
-
 def stream_parquet_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bronze-layer file delivery: the events stream written to a
     partitioned parquet table through Spark's transactional file sink,
@@ -330,8 +301,9 @@ def stream_parquet_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     The file sink + checkpoint is Structured Streaming's exactly-once
     delivery mechanism: each micro-batch's files are recorded in the
     sink's _spark_metadata commit log, so a crashed/retried batch can
-    never double-count — and because the sink location is durable (see
-    :func:`_stream_sink_dirs`), calling this twice reuses the checkpoint:
+    never double-count — and because the sink location is durable (the
+    ``streamSinkDir`` root keyed by the events source identity, see
+    :func:`..catalog.artifact_dir`), calling this twice reuses the checkpoint:
     the second run processes zero micro-batches and the read-back is
     unchanged, which is the restart-safety contract a production bronze
     ingest relies on (r6: a driver-local tempdir + localCheckpoint
@@ -345,7 +317,8 @@ def stream_parquet_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     by parquet write bandwidth, and the commit log keeps O(batches)
     metadata, compacted periodically.
     """
-    data_dir, chk_dir = _stream_sink_dirs(spark, sf_dir)
+    base = artifact_dir(spark, "streamSinkDir", [f"{sf_dir}/events.parquet"])
+    data_dir, chk_dir = f"{base}/data", f"{base}/chk"
     with _stream_conf(spark):
         q = (
             _stream_events(spark, sf_dir)
