@@ -1,21 +1,18 @@
-"""Crash-safe purge swaps (r12, ADVICE item 2).
+"""Crash-safe purge swaps.
 
-The forget ops rewrite their store trees and swap them in. The r11 swap
-order (``fs.delete(old)`` then ``fs.rename(next, old)``) had a wedge
-window: a crash between the two calls leaves a marker-complete store
-with the data directory MISSING, and re-runs skip the rebuild then fail
-reading the absent path with no self-repair. r12 fixes it twice over:
+The forget ops rewrite their store trees and swap them in. Two rules
+keep every crash point recoverable:
 
 * :func:`catalog.swap_subtrees` renames the live tree ASIDE before
   renaming the rewrite in (no crash point loses both copies), and
+  creates the purge marker only after every swap, and
 * every forget op validates the data directories ALONGSIDE the ready
-  marker (:func:`catalog.store_intact`), so even a swap interrupted at
-  the worst point re-heals by rebuilding instead of wedging.
+  marker (:func:`catalog.store_intact`), so a store whose data
+  directory is missing re-heals by rebuilding instead of wedging.
 
-These tests simulate the worst-point crash state directly (data dir
-deleted, base marker still present, forget marker absent — exactly what
-the old delete-first order left behind) and assert the op recovers and
-serves the same rows.
+These tests build the worst crash state directly (data dir deleted,
+base marker still present, forget marker absent or present) and assert
+the op recovers and serves the same rows.
 """
 
 from __future__ import annotations
@@ -62,10 +59,10 @@ def test_bm25_forget_reheals_after_interrupted_swap(spark, sf_dir, artifact_root
 def test_bm25_forget_reheals_even_with_stale_forget_marker(
     spark, sf_dir, artifact_roots
 ):
-    """If the crash landed AFTER the forget marker was written but a data
-    tree is missing (marker-complete, dir-gone — the unrecoverable state
-    of the r11 order), store_intact must still trigger the rebuild and
-    the re-heal must re-run the purge (the stale marker is cleared)."""
+    """If a data tree is missing while both markers are present
+    (marker-complete, dir-gone — what a delete-before-rename swap would
+    leave), store_intact must still trigger the rebuild and the re-heal
+    must re-run the purge (the stale marker is cleared)."""
     want = [tuple(r) for r in lexical.bm25_index_forget(spark, sf_dir).collect()]
     base = _lex_forget_base(spark, sf_dir)
 
@@ -105,7 +102,7 @@ def test_swap_subtrees_never_deletes_before_rename(spark, tmp_path):
     (base / "data_trash").mkdir()
     (base / "data_trash" / "stale.txt").write_text("stale")
 
-    swap_subtrees(spark, str(base), ("data",))
+    swap_subtrees(spark, str(base), ("data",), "_DATA_READY")
 
     assert (base / "data" / "new.txt").read_text() == "new"
     assert not (base / "data_next").exists()

@@ -104,7 +104,7 @@ def test_lm_compact_one_file_per_bucket_and_equal(spark, sf_dir, artifact_roots)
     )
     assert compacted == retrain
 
-    base = _pair_cache_dir(spark, sf_dir, modality="lm-append")
+    base = _pair_cache_dir(spark, sf_dir, modality="lm-append-inst")
     files = spark.read.parquet(f"{base}/c12_compact").inputFiles()
     buckets = {f.split("bucket=")[1].split("/")[0] for f in files}
     assert len(files) == len(buckets), (

@@ -369,10 +369,10 @@ def test_lm_forget_cancels_exactly_and_is_idempotent(spark, sf_dir):
     # the merged store nets to the surviving corpus's counts exactly:
     # no bigram unique to the revoked source survives the merge, and no
     # surviving bigram lost mass
-    base = _pair_cache_dir(spark, sf_dir, modality="lm-forget")
+    base = _pair_cache_dir(spark, sf_dir, modality="lm-forget-inst")
     merged = {
         (r["w1"], r["w2"]): r["net"]
-        for r in spark.read.parquet(f"{base}/c12")
+        for r in spark.read.parquet(f"{base}/c12", f"{base}/c12_revoked")
         .groupBy("w1", "w2")
         .agg(F.sum("c12").alias("net"))
         .filter(F.col("net") > 0)

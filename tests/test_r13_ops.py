@@ -368,10 +368,11 @@ def test_dsir_staged_install_reheals_every_crash_point(spark, sf_dir, artifact_r
     got = [tuple(r) for r in curate.dsir_counts_append(spark, sf_dir).collect()]
     assert got == want
 
-    # crash BEFORE the rename: _next debris, no data dir, no marker —
-    # the re-run overwrites the staging dir and installs once
+    # crash BEFORE the rename: the batch sits in a dead staging dir, no
+    # data dir, no marker — the re-run stages afresh and installs once
     (base / "_BATCH_READY").unlink()
-    shutil.move(base / "batch", base / "batch_next")
+    (base / "_staging-dead").mkdir()
+    shutil.move(base / "batch", base / "_staging-dead" / "batch")
     got = [tuple(r) for r in curate.dsir_counts_append(spark, sf_dir).collect()]
     assert got == want
     assert (base / "batch").exists()

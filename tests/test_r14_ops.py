@@ -17,6 +17,7 @@ from pyspark.sql import functions as F
 
 sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
+from zylyty_data_engineer_challenge_spark.catalog import build_once  # noqa: E402
 from zylyty_data_engineer_challenge_spark.operators import (  # noqa: E402
     curate,
     similarity,
@@ -201,7 +202,7 @@ class TestContamIndexStore:
         ]
         base = _pair_cache_dir(spark, sf_dir, modality="contam-batch")
         late = spark.createDataFrame([Row(h="f" * 32, c=7)])
-        curate._staged_install(spark, late, base, "late")
+        curate._install(spark, late, base, "late")
         after = [
             tuple(r) for r in text.contam_index_compact(spark, sf_dir).collect()
         ]
@@ -215,13 +216,18 @@ class TestContamIndexStore:
 
 
 class TestStagedInstallHardening:
-    """_staged_install r14: dest completeness is judged by the parquet
-    job's _SUCCESS commit file, so a partial directory left by a
+    """catalog.build_once: a live child's completeness is judged by the
+    parquet job's _SUCCESS commit file, so a partial directory left by a
     non-atomic (copy+delete) rename is rewritten, never trusted."""
 
     def _counts(self, spark, rows):
         return spark.createDataFrame(
             [Row(b=b, r=r, tc=tc) for b, r, tc in rows]
+        )
+
+    def _install(self, spark, df, base):
+        build_once(
+            spark, base, "_PART_READY", lambda stage: df.write.parquet(f"{stage}/part")
         )
 
     def test_partial_dest_without_success_is_rewritten(
@@ -232,7 +238,7 @@ class TestStagedInstallHardening:
         dest.mkdir(parents=True)
         (dest / "stale.parquet").write_bytes(b"partial-copy-debris")
         good = self._counts(spark, [(1, 10, 5), (2, 20, 7)])
-        curate._staged_install(spark, good, base, "part")
+        self._install(spark, good, base)
         got = {
             (r["b"], r["r"], r["tc"])
             for r in spark.read.parquet(f"{base}/part").collect()
@@ -249,10 +255,10 @@ class TestStagedInstallHardening:
         the pin is that the original install survives verbatim."""
         base = str(tmp_path / "store")
         first = self._counts(spark, [(1, 1, 1)])
-        curate._staged_install(spark, first, base, "part")
+        self._install(spark, first, base)
         (Path(base) / "_PART_READY").unlink()  # simulate pre-marker crash
         second = self._counts(spark, [(9, 9, 9)])
-        curate._staged_install(spark, second, base, "part")
+        self._install(spark, second, base)
         got = [tuple(r) for r in spark.read.parquet(f"{base}/part").collect()]
         assert got == [(1, 1, 1)]
 
@@ -275,7 +281,7 @@ class TestCompactionManifest:
         late = spark.createDataFrame(
             [Row(b=b, r=1000, tc=100) for b in range(3)]
         )
-        curate._staged_install(spark, late, base, "late")
+        curate._install(spark, late, base, "late")
         after = [
             tuple(r) for r in curate.dsir_counts_compact(spark, sf_dir).collect()
         ]

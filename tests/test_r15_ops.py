@@ -31,6 +31,7 @@ from pyspark.sql import functions as F
 
 sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
+from zylyty_data_engineer_challenge_spark.catalog import build_once  # noqa: E402
 from zylyty_data_engineer_challenge_spark.operators import (  # noqa: E402
     curate,
     dedup,
@@ -272,9 +273,9 @@ class TestContamBroadcastGuard:
 
 
 class TestStagedInstallMarkerConfGuard:
-    """r14 ADVICE: _staged_install's completeness witness is the
-    committer's _SUCCESS file — with success markers disabled the check
-    silently degrades, so install asserts the conf instead."""
+    """catalog.build_once's completeness witness is the committer's
+    _SUCCESS file — with success markers disabled the check silently
+    degrades, so a build asserts the conf instead."""
 
     def test_disabled_markers_raise(self, spark, tmp_path):
         hconf = spark.sparkContext._jsc.hadoopConfiguration()
@@ -283,18 +284,23 @@ class TestStagedInstallMarkerConfGuard:
         hconf.set(key, "false")
         try:
             with pytest.raises(RuntimeError, match="marksuccessfuljobs"):
-                curate._staged_install(
+                build_once(
                     spark,
-                    _docs(spark).select("doc_id"),
                     str(tmp_path / "store"),
-                    "base",
+                    "_BASE_READY",
+                    lambda stage: _docs(spark)
+                    .select("doc_id")
+                    .write.parquet(f"{stage}/base"),
                 )
         finally:
             hconf.set(key, prev)
 
     def test_default_markers_install_fine(self, spark, tmp_path):
-        curate._staged_install(
-            spark, _docs(spark).select("doc_id"), str(tmp_path / "store2"), "base"
+        build_once(
+            spark,
+            str(tmp_path / "store2"),
+            "_BASE_READY",
+            lambda stage: _docs(spark).select("doc_id").write.parquet(f"{stage}/base"),
         )
         got = spark.read.parquet(str(tmp_path / "store2" / "base")).count()
         assert got == 4

@@ -122,7 +122,7 @@ def test_pairs_compact_one_file_per_bucket_and_equal(spark, sf_dir, artifact_roo
     after = sorted(tuple(r) for r in compacted_df.collect())
     assert after == before, "compaction must not change the pair set"
 
-    base = dedup._pair_cache_dir(spark, sf_dir, modality="append-base")
+    base = dedup._pair_cache_dir(spark, sf_dir, modality="append-inst")
     files = [
         f
         for f in compacted_df.inputFiles()

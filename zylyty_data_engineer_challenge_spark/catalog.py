@@ -12,7 +12,9 @@ from __future__ import annotations
 import hashlib
 import os
 import tempfile
+import uuid
 
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -183,16 +185,17 @@ def store_intact(spark: SparkSession, marker_path: str, *data_paths: str) -> boo
     return all(fs.exists(hadoop_fs(spark, p)[1]) for p in data_paths)
 
 
-def swap_subtrees(spark: SparkSession, base: str, names) -> None:
-    """Crash-safe commit of a rewrite-then-swap purge: for each ``name``,
-    ``<name>_next`` replaces ``<name>`` by renaming the live tree ASIDE
-    (``<name>_trash``), renaming the rewritten tree in, then deleting the
-    trash — never delete-before-rename, so no crash point loses both
-    copies and the live path is absent only between the two renames (an
-    interrupted swap is then healed by the caller's :func:`store_intact`
-    rebuild; the old delete-first order left a marker-complete store with
-    the data directory gone and no self-repair). Any ``_trash`` debris
-    from a previous interrupted swap is cleared first."""
+def swap_subtrees(spark: SparkSession, base: str, names, marker: str) -> None:
+    """Replace live trees with rewritten ones, then create ``<base>/<marker>``.
+
+    For each ``name``, ``<name>_next`` replaces ``<name>``: the live tree
+    is renamed aside to ``<name>_trash``, the rewrite is renamed in, and
+    the trash is deleted. No crash point loses both copies, and the live
+    path is absent only between the two renames; a caller that checks
+    its data directories with :func:`store_intact` rebuilds in that
+    case. Debris from an earlier interrupted swap is cleared first. The
+    marker is created after every swap, so a present marker means every
+    tree is the rewritten one."""
     for name in names:
         fs, old = hadoop_fs(spark, f"{base}/{name}")
         _, nxt = hadoop_fs(spark, f"{base}/{name}_next")
@@ -205,6 +208,100 @@ def swap_subtrees(spark: SparkSession, base: str, names) -> None:
         if not fs.rename(nxt, old):
             raise RuntimeError(f"swap_subtrees: rename-in failed for {name}")
         fs.delete(trash, True)
+    fs, done = hadoop_fs(spark, f"{base}/{marker}")
+    fs.create(done, True).close()
+
+
+def build_once(spark: SparkSession, base: str, marker: str, build) -> None:
+    """Publish a store's child tables once, guarded by ``<base>/<marker>``.
+
+    If the marker exists this is one ``exists`` call. Otherwise
+    ``build(stage)`` writes each child table under a fresh
+    ``<base>/_staging-<uuid>`` directory (a build that reads back an
+    earlier child reads it from ``stage``). Each staged child directory
+    is then published as ``<base>/<child>`` by rename, the marker is
+    created last, and the staging directory is deleted. A build that
+    raises leaves no marker and no new live child.
+
+    A live child is never overwritten. One that holds its committer
+    ``_SUCCESS`` file is complete, so it is kept and the staged copy is
+    dropped: that is the state a crash between publish and marker
+    leaves, and the state a writer that lost a race sees. One without
+    ``_SUCCESS`` is partial (a non-atomic object-store rename), so it is
+    deleted and replaced. The rename refuses an existing destination, so
+    two racing writers never nest one copy inside the other. The
+    completeness test is proof-grade where rename is atomic (local FS,
+    HDFS); on a copy-and-delete object store (S3A) a crash mid-rename
+    can leave a partial copy that already holds ``_SUCCESS``, so point
+    the artifact roots at an HDFS-compatible path there.
+    """
+    fs, done = hadoop_fs(spark, f"{base}/{marker}")
+    if fs.exists(done):
+        return
+    # _SUCCESS is the completeness witness for a live child
+    hconf = spark.sparkContext._jsc.hadoopConfiguration()
+    key = "mapreduce.fileoutputcommitter.marksuccessfuljobs"
+    if str(hconf.get(key, "true")).lower() != "true":
+        raise RuntimeError(f"build_once requires {key}=true")
+    stage = f"{base}/_staging-{uuid.uuid4().hex}"
+    _, staged = hadoop_fs(spark, stage)
+    try:
+        build(stage)
+        for st in fs.listStatus(staged):
+            if st.isDirectory():
+                _publish(spark, fs, st.getPath(), f"{base}/{st.getPath().getName()}")
+        fs.create(done, True).close()
+    finally:
+        fs.delete(staged, True)
+
+
+def _publish(spark: SparkSession, fs, src, dst: str) -> None:
+    """Rename the staged child ``src`` to ``dst`` unless a complete
+    child already lives there (see :func:`build_once`)."""
+    _, live = hadoop_fs(spark, dst)
+    _, success = hadoop_fs(spark, f"{dst}/_SUCCESS")
+    # live before _SUCCESS: a racer's atomic rename lands a live child
+    # that already holds _SUCCESS, so it is never taken for partial
+    if fs.exists(live):
+        if fs.exists(success):
+            return
+        fs.delete(live, True)
+    jvm = spark._jvm
+    # FileSystem.rename onto an existing directory moves src INSIDE it;
+    # FileContext.rename with Rename.NONE raises instead
+    rename = getattr(jvm.org.apache.hadoop.fs, "Options$Rename")
+    opts = spark.sparkContext._gateway.new_array(rename, 1)
+    opts[0] = rename.NONE
+    fc = jvm.org.apache.hadoop.fs.FileContext.getFileContext(
+        fs.getUri(), spark._jsc.hadoopConfiguration()
+    )
+    try:
+        fc.rename(src, live, opts)
+    except Py4JJavaError as e:
+        # a racer published first: keep its child if it is complete
+        lost_race = e.java_exception.getClass().getSimpleName() == (
+            "FileAlreadyExistsException"
+        )
+        if not (lost_race and fs.exists(success)):
+            raise
+
+
+def build_then_purge(spark: SparkSession, base: str, names, build, purge) -> None:
+    """A store built once under ``_BASE_READY`` and purged once under
+    ``_FORGET_READY``. ``build(stage)`` writes the child tables
+    ``names`` (see :func:`build_once`); ``purge()`` writes the rewrite
+    ``<base>/<name>_next`` of each, which :func:`swap_subtrees` swaps in
+    before it marks. If a data tree is missing (a swap interrupted
+    between its renames), both markers are dropped, so the base is
+    rebuilt and the purge re-runs."""
+    if not store_intact(spark, f"{base}/_BASE_READY", *(f"{base}/{n}" for n in names)):
+        for m in ("_BASE_READY", "_FORGET_READY"):
+            fs, path = hadoop_fs(spark, f"{base}/{m}")
+            fs.delete(path, True)
+        build_once(spark, base, "_BASE_READY", build)
+    if not artifact_ready(spark, f"{base}/_FORGET_READY"):
+        purge()
+        swap_subtrees(spark, base, names, "_FORGET_READY")
 
 
 def source_identity(spark: SparkSession, src: str) -> str:

@@ -194,14 +194,15 @@ def lloyd_labels_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
     safety is by construction: regenerated embeddings change the
     identity and re-train.
     """
-    from ..catalog import hadoop_fs
+    from ..catalog import build_once
     from .dedup import _pair_cache_dir
 
     base = _pair_cache_dir(spark, sf_dir, modality="lloyd", src="embeddings.parquet")
-    fs, marker = hadoop_fs(spark, f"{base}/_LABELS_READY")
-    if not fs.exists(marker):
-        kmeans_lloyd(spark, sf_dir).write.mode("overwrite").parquet(f"{base}/labels")
-        fs.create(marker, True).close()
+
+    def build(stage: str) -> None:
+        kmeans_lloyd(spark, sf_dir).write.parquet(f"{stage}/labels")
+
+    build_once(spark, base, "_LABELS_READY", build)
     return spark.read.parquet(f"{base}/labels")
 
 
@@ -226,25 +227,24 @@ def cluster_labels_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``kmeans_lloyd``'s SQL verbatim (one oracle, a second execution
     path). Each increment costs O(new rows x K); nothing is rewritten.
     """
-    from ..catalog import hadoop_fs
+    from ..catalog import build_once
     from .dedup import APPEND_MOD, _pair_cache_dir
 
     base = _pair_cache_dir(
         spark, sf_dir, modality="lloyd-append", src="embeddings.parquet"
     )
-    fs, marker = hadoop_fs(spark, f"{base}/_APPEND_READY")
-    if not fs.exists(marker):
-        lloyd_centroids(spark, sf_dir).write.mode("overwrite").parquet(
-            f"{base}/centroids"
-        )
+
+    def build(stage: str) -> None:
+        lloyd_centroids(spark, sf_dir).write.parquet(f"{stage}/centroids")
         emb = _quantized(spark, sf_dir)
         is_new = F.col("vec_id") % APPEND_MOD == 0
         for part, mode in ((emb.filter(~is_new), "overwrite"),
                            (emb.filter(is_new), "append")):
             _assign(
-                part, spark.read.parquet(f"{base}/centroids")
-            ).write.mode(mode).parquet(f"{base}/labels")
-        fs.create(marker, True).close()
+                part, spark.read.parquet(f"{stage}/centroids")
+            ).write.mode(mode).parquet(f"{stage}/labels")
+
+    build_once(spark, base, "_APPEND_READY", build)
     return spark.read.parquet(f"{base}/labels").orderBy("vec_id")
 
 
@@ -373,33 +373,25 @@ def cluster_labels_forget(spark: SparkSession, sf_dir: str) -> DataFrame:
     the next corpus snapshot. Marker-idempotent; pytest pins zero
     revoked vec_ids physically surviving in the stored parquet.
     """
-    from ..catalog import hadoop_fs, store_intact, swap_subtrees
+    from ..catalog import build_then_purge
     from .dedup import _pair_cache_dir
 
     base = _pair_cache_dir(
         spark, sf_dir, modality="lloyd-forget", src="embeddings.parquet"
     )
-    fs, built = hadoop_fs(spark, f"{base}/_BASE_READY")
-    # marker AND data-dir validation: an interrupted purge swap re-heals
-    # by rebuilding instead of wedging on a missing labels tree
-    if not store_intact(spark, f"{base}/_BASE_READY", f"{base}/labels"):
+
+    def build(stage: str) -> None:
         # the standing production store: trained and persisted before
         # anyone knew the vectors would be revoked
-        kmeans_lloyd(spark, sf_dir).write.mode("overwrite").parquet(
-            f"{base}/labels"
-        )
-        _, half = hadoop_fs(spark, f"{base}/_FORGET_READY")
-        fs.delete(half, True)  # force the purge to re-run after a re-heal
-        fs.create(built, True).close()
+        kmeans_lloyd(spark, sf_dir).write.parquet(f"{stage}/labels")
 
-    _, purged = hadoop_fs(spark, f"{base}/_FORGET_READY")
-    if not fs.exists(purged):
+    def purge() -> None:
         kept = spark.read.parquet(f"{base}/labels").filter(
             F.col("vec_id") % LABELS_FORGET_MOD != LABELS_FORGET_REM
         )
         kept.write.mode("overwrite").parquet(f"{base}/labels_next")
-        swap_subtrees(spark, base, ("labels",))
-        fs.create(purged, True).close()
+
+    build_then_purge(spark, base, ("labels",), build, purge)
 
     return spark.read.parquet(f"{base}/labels").orderBy("vec_id")
 

@@ -2028,20 +2028,19 @@ def build_dsir_counts(spark: SparkSession, sf_dir: str) -> str:
     store-discipline split; compositions (:func:`pipeline_curate_v2`'s
     dsir stage, the shift gate's kept set) read the weights parquet.
     """
-    from ..catalog import hadoop_fs
+    from ..catalog import build_once
     from .dedup import _pair_cache_dir
 
     base = _pair_cache_dir(spark, sf_dir, modality="dsir-counts")
-    fs, marker = hadoop_fs(spark, f"{base}/_DSIR_COUNTS_READY")
-    if not fs.exists(marker):
+
+    def build(stage: str) -> None:
         docs = load_table(spark, sf_dir, "documents")
-        dsir_bucket_counts(_dsir_gb(docs)).write.mode("overwrite").parquet(
-            f"{base}/counts"
-        )
+        dsir_bucket_counts(_dsir_gb(docs)).write.parquet(f"{stage}/counts")
         _dsir_weights(
-            docs, dists=spark.read.parquet(f"{base}/counts").select("b", "r", "tc")
-        ).write.mode("overwrite").parquet(f"{base}/weights")
-        fs.create(marker, True).close()
+            docs, dists=spark.read.parquet(f"{stage}/counts").select("b", "r", "tc")
+        ).write.parquet(f"{stage}/weights")
+
+    build_once(spark, base, "_DSIR_COUNTS_READY", build)
     return base
 
 
@@ -2117,68 +2116,24 @@ ORACLE_SQL["dsir_counts_cached"] = f"""
 """
 
 
-def _staged_install(spark, partials: DataFrame, base: str, name: str) -> None:
-    """Crash-safe one-shot installment of a partial-count table into an
-    additive store: write to ``<name>_next``, atomic-rename to
-    ``<name>``, then mark. The plain append-then-mark form (the LM
-    store's) has a double-append window — a crash after the parquet job
-    commits but before the marker lands makes the re-run append the same
-    partials AGAIN, silently corrupting the additive state. Here every
-    crash point re-heals: before the rename the re-run overwrites
-    ``_next``; after it, the data directory's COMPLETENESS (its
-    ``_SUCCESS`` commit file, not the marker) is what skips the rewrite,
-    so nothing is ever double-counted.
+def _install(spark, partials: DataFrame, base: str, name: str) -> None:
+    """Publish ``partials`` as the installment ``<base>/<name>`` of an
+    additive store, once, under its own ``_<NAME>_READY`` marker (the
+    contract :func:`_installed_names` discovers). :func:`..catalog.
+    build_once` stages, renames and marks, and keeps a complete live
+    child, so a crash at any point re-heals without double-counting."""
+    from ..catalog import build_once
 
-    Filesystem contract: the dest-exists short-circuit is proof-grade
-    only where ``fs.rename`` is atomic (local FS, HDFS). On
-    copy-and-delete object stores (S3A) a crash mid-rename can leave a
-    PARTIAL dest directory; checking for the parquet job's ``_SUCCESS``
-    file inside dest (absent until the job committed, copied like any
-    other member file) closes that to a near-miss — a partial copy that
-    happens to include ``_SUCCESS`` is still possible there, so on such
-    stores point the cache root at an HDFS-compatible path or front it
-    with S3Guard-class consistency. A found-partial dest is deleted and
-    rewritten, never trusted."""
-    from ..catalog import hadoop_fs
+    def build(stage: str) -> None:
+        partials.write.parquet(f"{stage}/{name}")
 
-    # the completeness check below KEYS on the committer's _SUCCESS
-    # marker; with markers disabled the check silently degrades (every
-    # crash-window re-run deletes and rewrites a complete dest — safe
-    # but wasteful, and no longer proof-grade), so fail loudly instead
-    # of degrading silently (r14 ADVICE)
-    committer_marks = (
-        spark.sparkContext._jsc.hadoopConfiguration().get(
-            "mapreduce.fileoutputcommitter.marksuccessfuljobs", "true"
-        )
-    )
-    if str(committer_marks).lower() != "true":
-        raise RuntimeError(
-            "_staged_install requires mapreduce.fileoutputcommitter."
-            "marksuccessfuljobs=true (the _SUCCESS file is the "
-            "completeness witness for crash-window re-heals)"
-        )
-    fs, marker = hadoop_fs(spark, f"{base}/_{name.upper()}_READY")
-    if fs.exists(marker):
-        return
-    _, dest = hadoop_fs(spark, f"{base}/{name}")
-    _, success = hadoop_fs(spark, f"{base}/{name}/_SUCCESS")
-    if not (fs.exists(dest) and fs.exists(success)):
-        if fs.exists(dest):  # partial copy from an interrupted rename
-            fs.delete(dest, True)
-        _, nxt = hadoop_fs(spark, f"{base}/{name}_next")
-        partials.write.mode("overwrite").parquet(f"{base}/{name}_next")
-        if not fs.rename(nxt, dest):
-            raise RuntimeError(f"staged install rename failed for {name}")
-    fs.create(marker, True).close()
+    build_once(spark, base, f"_{name.upper()}_READY", build)
 
 
 def _merged_counts(spark, base: str, *names: str) -> DataFrame:
     """Read-time sum-merge of the store's installment tables."""
-    df = None
-    for name in names:
-        part = spark.read.parquet(f"{base}/{name}")
-        df = part if df is None else df.unionByName(part)
-    return df.groupBy("b").agg(
+    merged = spark.read.parquet(*(f"{base}/{name}" for name in names))
+    return merged.groupBy("b").agg(
         F.sum("r").cast("long").alias("r"),
         F.sum("tc").cast("long").alias("tc"),
     )
@@ -2193,9 +2148,9 @@ def dsir_counts_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     sum-merge. Append ≡ full rebuild holds exactly (the counts are plain
     SUMs), so the oracle is :func:`dsir_counts_cached`'s full-corpus SQL
     verbatim and hash-equality is the proof. Installments land via
-    :func:`_staged_install` (write-aside + atomic rename), so every
-    crash point re-heals without double-counting — pinned by
-    tests/test_r13_ops.py's worst-point crash simulations.
+    :func:`_install`, so every crash point re-heals without
+    double-counting — pinned by tests/test_r13_ops.py's worst-point
+    crash simulations.
     """
     from .dedup import APPEND_MOD, _pair_cache_dir
 
@@ -2203,12 +2158,8 @@ def dsir_counts_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     is_new = F.col("doc_id") % APPEND_MOD == 0
 
     base = _pair_cache_dir(spark, sf_dir, modality="dsir-batch")
-    _staged_install(
-        spark, dsir_bucket_counts(_dsir_gb(docs.filter(~is_new))), base, "base"
-    )
-    _staged_install(
-        spark, dsir_bucket_counts(_dsir_gb(docs.filter(is_new))), base, "batch"
-    )
+    _install(spark, dsir_bucket_counts(_dsir_gb(docs.filter(~is_new))), base, "base")
+    _install(spark, dsir_bucket_counts(_dsir_gb(docs.filter(is_new))), base, "batch")
     return _merged_counts(spark, base, "base", "batch").orderBy("b")
 
 
@@ -2219,7 +2170,7 @@ ORACLE_SQL["dsir_counts_append"] = ORACLE_SQL["dsir_counts_cached"]
 def dsir_counts_forget(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Estimator UNLEARNING: a revoked source's gram counts are
     installed NEGATED beside the model (the :func:`..text.text_lm_forget`
-    algebra with the crash-safe :func:`_staged_install` landing), the
+    algebra with the crash-safe :func:`_install` landing), the
     read-time sum-merge cancels them exactly (additive ints), and
     buckets that net to zero raw mass drop — bit-equal to retraining the
     estimator on the surviving corpus, at O(revoked-slice) cost. The
@@ -2231,11 +2182,11 @@ def dsir_counts_forget(spark: SparkSession, sf_dir: str) -> DataFrame:
     revoked = F.col("source") == FORGET_SOURCE
 
     base = _pair_cache_dir(spark, sf_dir, modality="dsir-unlearn")
-    _staged_install(spark, dsir_bucket_counts(_dsir_gb(docs)), base, "base")
+    _install(spark, dsir_bucket_counts(_dsir_gb(docs)), base, "base")
     negated = dsir_bucket_counts(_dsir_gb(docs.filter(revoked))).select(
         "b", (-F.col("r")).alias("r"), (-F.col("tc")).alias("tc")
     )
-    _staged_install(spark, negated, base, "revoked")
+    _install(spark, negated, base, "revoked")
     return (
         _merged_counts(spark, base, "base", "revoked")
         .filter(F.col("r") > 0)
@@ -2844,10 +2795,9 @@ DSIR_COMPACT_FILES = 1  # the merged estimator is 64 rows — one file
 
 
 def _installed_names(spark, base: str) -> list[str]:
-    """The installment tables currently landed in an additive store:
-    child directories of ``base`` carrying their own
-    ``_<NAME>_READY`` marker (the :func:`_staged_install` contract),
-    excluding the compactor's own output. Sorted, so the manifest the
+    """The installment tables landed in an additive store: child
+    directories of ``base`` that carry their own ``_<NAME>_READY``
+    marker (the :func:`_install` contract). Sorted, so the manifest the
     compaction marker is keyed on is deterministic."""
     from ..catalog import hadoop_fs
 
@@ -2855,16 +2805,31 @@ def _installed_names(spark, base: str) -> list[str]:
     names = []
     for st in fs.listStatus(bpath):
         n = st.getPath().getName()
-        if (
-            st.isDirectory()
-            and not n.startswith("_")
-            and not n.endswith("_next")
-            and n != "counts_compact"
-        ):
+        if st.isDirectory() and not n.startswith("_"):
             _, m = hadoop_fs(spark, f"{base}/_{n.upper()}_READY")
             if fs.exists(m):
                 names.append(n)
     return sorted(names)
+
+
+def _compact_installments(spark, base: str, merge, n_files: int) -> None:
+    """Materialize ``merge(spark, base, *names)`` over the store's
+    installed installments into ``n_files`` files of
+    ``<base>/counts_compact``. The marker is keyed on the manifest of
+    installed names, so an installment landed after a compaction misses
+    it and re-compacts; the rewrite replaces the live table through
+    :func:`..catalog.swap_subtrees`, which marks last."""
+    import hashlib
+
+    from ..catalog import artifact_ready, swap_subtrees
+
+    names = _installed_names(spark, base)
+    manifest = hashlib.sha1("|".join(names).encode()).hexdigest()[:12]
+    marker = f"_COMPACT_{manifest}_READY"
+    if not artifact_ready(spark, f"{base}/{marker}"):
+        merged = merge(spark, base, *names).repartition(n_files)
+        merged.write.mode("overwrite").parquet(f"{base}/counts_compact_next")
+        swap_subtrees(spark, base, ("counts_compact",), marker)
 
 
 def dsir_counts_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2879,35 +2844,23 @@ def dsir_counts_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     Completes the estimator lifecycle: build → append → compact →
     forget — the arc every persisted store carries.
 
-    r14 (ADVICE): the compaction marker is keyed on the MANIFEST of
-    installed installments (discovered, not hard-coded, and hashed into
-    the marker name), so an installment landed AFTER a compaction run
-    changes the manifest, misses the marker, and triggers a re-compact —
-    the old unconditional ``_COUNTS_COMPACT_READY`` marker froze the
-    compacted table at whatever the first compaction saw, silently
-    diverging from the append path's read-time merge on any later
-    append. Pinned by tests/test_r14_ops.py's third-installment replay.
+    The compaction marker is keyed on the MANIFEST of installed
+    installments (discovered, not hard-coded), so an installment landed
+    after a compaction run misses the marker and triggers a re-compact
+    (:func:`_compact_installments`) instead of serving a table frozen at
+    the first compaction. Pinned by tests/test_r14_ops.py's
+    third-installment replay.
     """
-    import hashlib
-
-    from ..catalog import hadoop_fs
     from .dedup import _pair_cache_dir
 
     base = _pair_cache_dir(spark, sf_dir, modality="dsir-batch")
     dsir_counts_append(spark, sf_dir)  # ensure both installments exist
-    names = _installed_names(spark, base)
-    manifest = hashlib.sha1("|".join(names).encode()).hexdigest()[:12]
-    fs, marker = hadoop_fs(spark, f"{base}/_COMPACT_{manifest}_READY")
-    dest = f"{base}/counts_compact"
-    if not fs.exists(marker):
-        (
-            _merged_counts(spark, base, *names)
-            .repartition(DSIR_COMPACT_FILES)
-            .write.mode("overwrite")
-            .parquet(dest)
-        )
-        fs.create(marker, True).close()
-    return spark.read.parquet(dest).select("b", "r", "tc").orderBy("b")
+    _compact_installments(spark, base, _merged_counts, DSIR_COMPACT_FILES)
+    return (
+        spark.read.parquet(f"{base}/counts_compact")
+        .select("b", "r", "tc")
+        .orderBy("b")
+    )
 
 
 # compaction is a pure layout change: same oracle, third execution path

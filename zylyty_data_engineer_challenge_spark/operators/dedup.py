@@ -408,7 +408,7 @@ def _pair_cache_dir(
 ) -> str:
     """Directory of a near-dup-derived store under the pair-cache root,
     keyed by ``src``'s identity and :data:`NEARDUP_PAIRS_VERSION`.
-    ``modality`` namespaces each store (``"emb"``, ``"append-base"``,
+    ``modality`` namespaces each store (``"emb"``, ``"append-inst"``,
     ``"dsir-counts"``, ...); the empty default is the minhash pair cache."""
     tag = f"{modality}-" if modality else ""
     return artifact_dir(
@@ -440,44 +440,49 @@ def dedup_minhash_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch-vs-corpus bucket join (never corpus x corpus) + verify over
     candidate pairs only, with shingle arrays recomputed just for
     candidate-touched docs (semi-join pushdown, ``restrict=True``) — the
-    whole reason an incremental path exists at 100 TB. Both the band
-    append and the pair append are marker-idempotent: re-running emits
-    the same result without duplicating stored rows.
+    whole reason an incremental path exists at 100 TB. The batch's bands
+    and pairs are their own installment children (``bands_new``,
+    ``pairs_new``) beside the base's, published under one marker, and
+    readers read base ∪ batch; re-running, even after the marker is
+    lost, emits the same result without duplicating stored rows.
     """
-    from ..catalog import hadoop_fs
+    from ..catalog import build_once
 
     docs = load_table(spark, sf_dir, "documents")
     is_new = F.col("doc_id") % APPEND_MOD == 0
     base_docs = docs.filter(~is_new)
     new_docs = docs.filter(is_new)
 
-    base = _pair_cache_dir(spark, sf_dir, modality="append-base")
-    fs, base_marker = hadoop_fs(spark, f"{base}/_BASE_READY")
-    if not fs.exists(base_marker):
-        _minhash_bands(base_docs).write.mode("overwrite").parquet(f"{base}/bands")
-        _minhash_lsh_pairs(base_docs).write.mode("overwrite").parquet(
-            f"{base}/pairs"
-        )
-        fs.create(base_marker, True).close()
+    base = _pair_cache_dir(spark, sf_dir, modality="append-inst")
 
-    _, appended = hadoop_fs(spark, f"{base}/_APPEND_READY")
-    if not fs.exists(appended):
+    def build_base(stage: str) -> None:
+        _minhash_bands(base_docs).write.parquet(f"{stage}/bands")
+        _minhash_lsh_pairs(base_docs).write.parquet(f"{stage}/pairs")
+
+    def build_batch(stage: str) -> None:
         stored_bands = spark.read.parquet(f"{base}/bands")
         # banding the batch feeds three subtrees (the new side of the
-        # candidate join, the union side, and the bands append) — the
-        # eager checkpoint runs shingle+minhash ONCE (r16, guide §4.5)
+        # candidate join, the union side, and the bands installment) —
+        # the eager checkpoint runs shingle+minhash ONCE
         new_bands = _minhash_bands(new_docs).localCheckpoint(eager=True)
         all_bands = stored_bands.unionByName(new_bands)
         # ONE symmetric new-vs-anything bucket join instead of both
-        # orientations (r16, §2.4 — identical distinct candidate set;
-        # new-vs-new pairs normalize to d1 < d2 under least/greatest)
+        # orientations (identical distinct candidate set; new-vs-new
+        # pairs normalize to d1 < d2 under least/greatest)
         cand = _band_candidates_sym(new_bands, all_bands)
-        new_pairs = _jaccard_verify(cand, docs, restrict=True)
-        new_pairs.write.mode("append").parquet(f"{base}/pairs")
-        new_bands.write.mode("append").parquet(f"{base}/bands")
-        fs.create(appended, True).close()
+        _jaccard_verify(cand, docs, restrict=True).write.parquet(
+            f"{stage}/pairs_new"
+        )
+        new_bands.write.parquet(f"{stage}/bands_new")
 
-    return spark.read.parquet(f"{base}/pairs").orderBy("d1", "d2")
+    build_once(spark, base, "_BASE_READY", build_base)
+    build_once(spark, base, "_APPEND_READY", build_batch)
+    return _minhash_append_pairs(spark, base).orderBy("d1", "d2")
+
+
+def _minhash_append_pairs(spark: SparkSession, base: str) -> DataFrame:
+    """The append store's pair table: base installment ∪ batch installment."""
+    return spark.read.parquet(f"{base}/pairs", f"{base}/pairs_new")
 
 
 def minhash_pairs_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -496,15 +501,16 @@ def minhash_pairs_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
     impossible by construction: the directory key embeds the documents
     source identity (mtime+size), so regenerated data re-detects.
     """
-    from ..catalog import hadoop_fs
+    from ..catalog import build_once
 
     base = _pair_cache_dir(spark, sf_dir)
-    fs, marker = hadoop_fs(spark, f"{base}/_PAIRS_READY")
-    if not fs.exists(marker):
+
+    def build(stage: str) -> None:
         docs = load_table(spark, sf_dir, "documents")
-        _minhash_lsh_pairs(docs).write.mode("overwrite").parquet(f"{base}/pairs")
-        _minhash_bands(docs).write.mode("overwrite").parquet(f"{base}/bands")
-        fs.create(marker, True).close()
+        _minhash_lsh_pairs(docs).write.parquet(f"{stage}/pairs")
+        _minhash_bands(docs).write.parquet(f"{stage}/bands")
+
+    build_once(spark, base, "_PAIRS_READY", build)
     return spark.read.parquet(f"{base}/pairs")
 
 
@@ -523,15 +529,14 @@ def embedding_pairs_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
     is by construction — the directory key embeds the embeddings file
     identity, so regenerated vectors re-detect.
     """
-    from ..catalog import hadoop_fs
+    from ..catalog import build_once
 
     base = _pair_cache_dir(spark, sf_dir, modality="emb", src="embeddings.parquet")
-    fs, marker = hadoop_fs(spark, f"{base}/_PAIRS_READY")
-    if not fs.exists(marker):
-        dedup_embedding_lsh(spark, sf_dir).write.mode("overwrite").parquet(
-            f"{base}/pairs"
-        )
-        fs.create(marker, True).close()
+
+    def build(stage: str) -> None:
+        dedup_embedding_lsh(spark, sf_dir).write.parquet(f"{stage}/pairs")
+
+    build_once(spark, base, "_PAIRS_READY", build)
     return spark.read.parquet(f"{base}/pairs")
 
 
@@ -1071,26 +1076,25 @@ def dedup_pairs_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     then bucket-parallel writes; a background maintenance job off the
     serving path, the same shape as any LSM/lakehouse compactor.
     """
-    from ..catalog import hadoop_fs
+    from ..catalog import build_once
 
-    base = _pair_cache_dir(spark, sf_dir, modality="append-base")
+    base = _pair_cache_dir(spark, sf_dir, modality="append-inst")
     dedup_minhash_append(spark, sf_dir)  # ensure base + append exist
-    fs, marker = hadoop_fs(spark, f"{base}/_PAIRS_COMPACT_READY")
-    dest = f"{base}/pairs_compact"
-    if not fs.exists(marker):
+
+    def build(stage: str) -> None:
         (
-            spark.read.parquet(f"{base}/pairs")
+            _minhash_append_pairs(spark, base)
             .withColumn(
                 "bucket", F.expr(f"pmod(hash(d1, d2), {PAIR_COMPACT_BUCKETS})")
             )
             .repartition("bucket")
-            .write.mode("overwrite")
-            .partitionBy("bucket")
-            .parquet(dest)
+            .write.partitionBy("bucket")
+            .parquet(f"{stage}/pairs_compact")
         )
-        fs.create(marker, True).close()
+
+    build_once(spark, base, "_PAIRS_COMPACT_READY", build)
     return (
-        spark.read.parquet(dest)
+        spark.read.parquet(f"{base}/pairs_compact")
         .select("d1", "d2", "common", "s1", "s2")
         .orderBy("d1", "d2")
     )
@@ -2432,51 +2436,47 @@ def dedup_pairs_forget(spark: SparkSession, sf_dir: str) -> DataFrame:
     additionally pins that no revoked doc_id physically survives in
     either store file.
     """
-    from ..catalog import hadoop_fs, load_table, store_intact, swap_subtrees
-    from .text import FORGET_SOURCE
+    from ..catalog import build_then_purge, load_table
 
     docs = load_table(spark, sf_dir, "documents")
     base = _pair_cache_dir(spark, sf_dir, modality="pairs-forget")
-    fs, built = hadoop_fs(spark, f"{base}/_BASE_READY")
-    # marker AND data-dir validation: an interrupted purge swap re-heals
-    # by rebuilding instead of wedging on a missing tree
-    if not store_intact(
-        spark, f"{base}/_BASE_READY", f"{base}/bands", f"{base}/pairs"
-    ):
-        _, half = hadoop_fs(spark, f"{base}/_FORGET_READY")
-        fs.delete(half, True)  # force the purge to re-run after a re-heal
-        fs.delete(built, True)
-    if not fs.exists(built):
+
+    def build(stage: str) -> None:
         # the standing production store: detection ran on EVERYTHING,
         # before anyone knew the source would be revoked
-        _minhash_bands(docs.select("doc_id", "text")).write.mode(
-            "overwrite"
-        ).parquet(f"{base}/bands")
-        stored = spark.read.parquet(f"{base}/bands")
-        _jaccard_verify(_band_candidates(stored, stored), docs).write.mode(
-            "overwrite"
-        ).parquet(f"{base}/pairs")
-        fs.create(built, True).close()
-
-    _, purged = hadoop_fs(spark, f"{base}/_FORGET_READY")
-    if not fs.exists(purged):
-        revoked = docs.filter(F.col("source") == FORGET_SOURCE).select("doc_id")
-        kept_bands = spark.read.parquet(f"{base}/bands").join(
-            revoked, "doc_id", "left_anti"
+        _minhash_bands(docs.select("doc_id", "text")).write.parquet(
+            f"{stage}/bands"
         )
-        kept_pairs = (
-            spark.read.parquet(f"{base}/pairs")
-            .join(revoked.select(F.col("doc_id").alias("d1")), "d1", "left_anti")
-            .join(revoked.select(F.col("doc_id").alias("d2")), "d2", "left_anti")
+        stored = spark.read.parquet(f"{stage}/bands")
+        _jaccard_verify(_band_candidates(stored, stored), docs).write.parquet(
+            f"{stage}/pairs"
         )
-        # rewrite-then-swap: the revoked rows are physically gone, not
-        # filtered at read time (takedowns reach bytes on disk)
-        kept_bands.write.mode("overwrite").parquet(f"{base}/bands_next")
-        kept_pairs.write.mode("overwrite").parquet(f"{base}/pairs_next")
-        swap_subtrees(spark, base, ("bands", "pairs"))
-        fs.create(purged, True).close()
 
+    def purge() -> None:
+        _purge_revoked(spark, base, "bands", docs)
+
+    build_then_purge(spark, base, ("bands", "pairs"), build, purge)
     return spark.read.parquet(f"{base}/pairs").orderBy("d1", "d2")
+
+
+def _purge_revoked(spark: SparkSession, base: str, doc_table: str, docs) -> None:
+    """Write the ``_next`` rewrites of a per-document table and its pair
+    table without the documents of the revoked source: the revoked rows
+    are physically gone after the swap, not filtered at read time
+    (takedowns reach bytes on disk)."""
+    from .text import FORGET_SOURCE
+
+    revoked = docs.filter(F.col("source") == FORGET_SOURCE).select("doc_id")
+    spark.read.parquet(f"{base}/{doc_table}").join(
+        revoked, "doc_id", "left_anti"
+    ).write.mode("overwrite").parquet(f"{base}/{doc_table}_next")
+    (
+        spark.read.parquet(f"{base}/pairs")
+        .join(revoked.select(F.col("doc_id").alias("d1")), "d1", "left_anti")
+        .join(revoked.select(F.col("doc_id").alias("d2")), "d2", "left_anti")
+        .write.mode("overwrite")
+        .parquet(f"{base}/pairs_next")
+    )
 
 
 def _pairs_forget_oracle() -> str:

@@ -170,15 +170,14 @@ def _write_index(spark: SparkSession, base: str, docs: DataFrame, mode: str) -> 
 def build_lexical_index(spark: SparkSession, sf_dir: str) -> str:
     """Build and persist the BM25 index once per source identity (marker-
     idempotent); returns the index directory."""
-    from ..catalog import hadoop_fs
+    from ..catalog import build_once
 
     base = _lex_dir(spark, sf_dir)
-    fs, marker = hadoop_fs(spark, f"{base}/_INDEX_READY")
-    if not fs.exists(marker):
-        _write_index(
-            spark, base, load_table(spark, sf_dir, "documents"), "overwrite"
-        )
-        fs.create(marker, True).close()
+
+    def build(stage: str) -> None:
+        _write_index(spark, stage, load_table(spark, sf_dir, "documents"), "overwrite")
+
+    build_once(spark, base, "_INDEX_READY", build)
     return base
 
 
@@ -246,17 +245,18 @@ def _build_incr_store(spark: SparkSession, sf_dir: str) -> str:
     and :func:`bm25_index_compact`: initial load of the standing corpus,
     then a parquet append of the arriving ``doc_id % APPEND_MOD`` batch
     into the same tb partitions. Marker-idempotent; returns the base."""
-    from ..catalog import hadoop_fs
+    from ..catalog import build_once
     from .dedup import APPEND_MOD
 
     base = _lex_dir(spark, sf_dir, tag="bm25-incr")
-    fs, marker = hadoop_fs(spark, f"{base}/_INCR_READY")
-    if not fs.exists(marker):
+
+    def build(stage: str) -> None:
         docs = load_table(spark, sf_dir, "documents")
         is_new = F.col("doc_id") % APPEND_MOD == 0
-        _write_index(spark, base, docs.filter(~is_new), "overwrite")
-        _write_index(spark, base, docs.filter(is_new), "append")
-        fs.create(marker, True).close()
+        _write_index(spark, stage, docs.filter(~is_new), "overwrite")
+        _write_index(spark, stage, docs.filter(is_new), "append")
+
+    build_once(spark, base, "_INCR_READY", build)
     return base
 
 
@@ -295,29 +295,13 @@ def bm25_index_forget(spark: SparkSession, sf_dir: str) -> DataFrame:
     influencing every ranking they no longer appear in. Oracle =
     text_bm25's SQL over the surviving corpus: hash-equality proves
     purge ≡ rebuild-without-the-source, including the statistics."""
-    from ..catalog import hadoop_fs, store_intact, swap_subtrees
+    from ..catalog import build_then_purge
     from .text import FORGET_SOURCE
 
     docs = load_table(spark, sf_dir, "documents")
     base = _lex_dir(spark, sf_dir, tag="bm25-forget")
-    fs, built = hadoop_fs(spark, f"{base}/_BASE_READY")
-    # marker AND data-dir validation: a purge interrupted mid-swap
-    # re-heals by rebuilding the base (and re-purging) instead of
-    # wedging every later read on a missing tree
-    if not store_intact(
-        spark,
-        f"{base}/_BASE_READY",
-        *(f"{base}/{n}" for n in ("postings", "doclens", "stats")),
-    ):
-        # the standing production index: built on everything, before
-        # anyone knew the source would be revoked
-        _write_index(spark, base, docs, "overwrite")
-        _, half = hadoop_fs(spark, f"{base}/_FORGET_READY")
-        fs.delete(half, True)  # force the purge to re-run after a re-heal
-        fs.create(built, True).close()
 
-    _, purged = hadoop_fs(spark, f"{base}/_FORGET_READY")
-    if not fs.exists(purged):
+    def purge() -> None:
         revoked = docs.filter(F.col("source") == FORGET_SOURCE).select("doc_id")
         kept_post = spark.read.parquet(f"{base}/postings").join(
             F.broadcast(revoked), "doc_id", "left_anti"
@@ -336,8 +320,13 @@ def bm25_index_forget(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum("dl").cast("long").alias("total_tokens"),
         )
         kept_stats.write.mode("overwrite").parquet(f"{base}/stats_next")
-        swap_subtrees(spark, base, ("postings", "doclens", "stats"))
-        fs.create(purged, True).close()
+
+    def build(stage: str) -> None:
+        # the standing production index: built on everything, before
+        # anyone knew the source would be revoked
+        _write_index(spark, stage, docs, "overwrite")
+
+    build_then_purge(spark, base, ("postings", "doclens", "stats"), build, purge)
 
     return _probe_lexical(spark, base)
 
@@ -404,17 +393,16 @@ def bm25_index_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     marker-idempotent and probe-invisible: the oracle is text_bm25's SQL
     verbatim (a FIFTH execution path of the one oracle), and pytest pins
     the one-file-per-bucket layout plus row equality."""
-    from ..catalog import hadoop_fs
+    from ..catalog import build_once
 
     base = _build_incr_store(spark, sf_dir)
-    fs, compacted = hadoop_fs(spark, f"{base}/_COMPACT_READY")
-    if not fs.exists(compacted):
+
+    def build(stage: str) -> None:
         (
             spark.read.parquet(f"{base}/postings")
             .repartition("tb")
-            .write.mode("overwrite")
-            .partitionBy("tb")
-            .parquet(f"{base}/postings_compact")
+            .write.partitionBy("tb")
+            .parquet(f"{stage}/postings_compact")
         )
         (
             spark.read.parquet(f"{base}/stats")
@@ -423,10 +411,10 @@ def bm25_index_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.sum("total_tokens").cast("long").alias("total_tokens"),
             )
             .coalesce(1)
-            .write.mode("overwrite")
-            .parquet(f"{base}/stats_compact")
+            .write.parquet(f"{stage}/stats_compact")
         )
-        fs.create(compacted, True).close()
+
+    build_once(spark, base, "_COMPACT_READY", build)
 
     # probe over the compacted trees through the identical probe plan
     # (doclens needs no compaction: written once per installment, read

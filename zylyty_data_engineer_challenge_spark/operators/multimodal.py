@@ -958,14 +958,15 @@ def phash_signatures_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
     own ``sigs``/``_SIGS_READY`` marker, so signatures and pairs of one
     source identity live together."""
     from .dedup import _pair_cache_dir
-    from ..catalog import hadoop_fs
+    from ..catalog import build_once
 
     base = _pair_cache_dir(spark, sf_dir, modality="phash")
-    fs, marker = hadoop_fs(spark, f"{base}/_SIGS_READY")
-    if not fs.exists(marker):
+
+    def build(stage: str) -> None:
         docs = load_table(spark, sf_dir, "documents")
-        _phash_sig_compute(docs).write.mode("overwrite").parquet(f"{base}/sigs")
-        fs.create(marker, True).close()
+        _phash_sig_compute(docs).write.parquet(f"{stage}/sigs")
+
+    build_once(spark, base, "_SIGS_READY", build)
     return spark.read.parquet(f"{base}/sigs")
 
 
@@ -1185,14 +1186,15 @@ def afp_signatures_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
     per call. Lives beside the audio pair cache (``modality='audio'``)
     under its own ``sigs``/``_SIGS_READY`` marker."""
     from .dedup import _pair_cache_dir
-    from ..catalog import hadoop_fs
+    from ..catalog import build_once
 
     base = _pair_cache_dir(spark, sf_dir, modality="audio")
-    fs, marker = hadoop_fs(spark, f"{base}/_SIGS_READY")
-    if not fs.exists(marker):
+
+    def build(stage: str) -> None:
         docs = load_table(spark, sf_dir, "documents")
-        _afp_sig_compute(docs).write.mode("overwrite").parquet(f"{base}/sigs")
-        fs.create(marker, True).close()
+        _afp_sig_compute(docs).write.parquet(f"{stage}/sigs")
+
+    build_once(spark, base, "_SIGS_READY", build)
     return spark.read.parquet(f"{base}/sigs")
 
 
@@ -1277,15 +1279,14 @@ def audio_pairs_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
     as :func:`phash_pairs_cached` (keyed by documents, ``audio``
     namespace)."""
     from .dedup import _pair_cache_dir
-    from ..catalog import hadoop_fs
+    from ..catalog import build_once
 
     base = _pair_cache_dir(spark, sf_dir, modality="audio")
-    fs, marker = hadoop_fs(spark, f"{base}/_PAIRS_READY")
-    if not fs.exists(marker):
-        mm_audio_dedup(spark, sf_dir).write.mode("overwrite").parquet(
-            f"{base}/pairs"
-        )
-        fs.create(marker, True).close()
+
+    def build(stage: str) -> None:
+        mm_audio_dedup(spark, sf_dir).write.parquet(f"{stage}/pairs")
+
+    build_once(spark, base, "_PAIRS_READY", build)
     return spark.read.parquet(f"{base}/pairs")
 
 
@@ -1303,15 +1304,14 @@ def phash_pairs_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
     parquet; regenerated images change the identity and re-detect.
     """
     from .dedup import _pair_cache_dir
-    from ..catalog import hadoop_fs
+    from ..catalog import build_once
 
     base = _pair_cache_dir(spark, sf_dir, modality="phash")
-    fs, marker = hadoop_fs(spark, f"{base}/_PAIRS_READY")
-    if not fs.exists(marker):
-        mm_phash_dedup(spark, sf_dir).write.mode("overwrite").parquet(
-            f"{base}/pairs"
-        )
-        fs.create(marker, True).close()
+
+    def build(stage: str) -> None:
+        mm_phash_dedup(spark, sf_dir).write.parquet(f"{stage}/pairs")
+
+    build_once(spark, base, "_PAIRS_READY", build)
     return spark.read.parquet(f"{base}/pairs")
 
 
@@ -1544,46 +1544,45 @@ def _mm_banded_append(
     new-vs-anything pairs, and the Hamming verify is per-pair from the
     carried signatures — unlike MinHash there is no shingle recompute at
     all; the entire incremental cost is O(batch) decode + a
-    batch-vs-corpus bucket join (never corpus x corpus)."""
+    batch-vs-corpus bucket join (never corpus x corpus). The batch's
+    signatures and pairs are their own installment children
+    (``sigs_new``, ``pairs_new``), and readers read base ∪ batch."""
     from .dedup import APPEND_MOD, _pair_cache_dir
-    from ..catalog import hadoop_fs
+    from ..catalog import build_once
 
     docs = load_table(spark, sf_dir, "documents")
     is_new = F.col("doc_id") % APPEND_MOD == 0
 
-    base = _pair_cache_dir(spark, sf_dir, modality=f"{modality}-append")
-    fs, base_marker = hadoop_fs(spark, f"{base}/_BASE_READY")
-    if not fs.exists(base_marker):
-        base_sigs = sig_compute(docs.filter(~is_new))
-        base_sigs.write.mode("overwrite").parquet(f"{base}/sigs")
-        stored = spark.read.parquet(f"{base}/sigs")  # decode once, join twice
+    base = _pair_cache_dir(spark, sf_dir, modality=f"{modality}-append-inst")
+
+    def build_base(stage: str) -> None:
+        sig_compute(docs.filter(~is_new)).write.parquet(f"{stage}/sigs")
+        stored = spark.read.parquet(f"{stage}/sigs")  # decode once, join twice
         bands = _explode_bands(stored, n_bands)
-        _banded_pairs(bands, bands, n_bands, ham_max).write.mode(
-            "overwrite"
-        ).parquet(f"{base}/pairs")
-        fs.create(base_marker, True).close()
-
-    _, appended = hadoop_fs(spark, f"{base}/_APPEND_READY")
-    if not fs.exists(appended):
-        new_sigs = sig_compute(docs.filter(is_new))
-        new_sigs.write.mode("append").parquet(f"{base}/sigs_new")
-        nb = _explode_bands(spark.read.parquet(f"{base}/sigs_new"), n_bands)
-        ab = _explode_bands(
-            spark.read.parquet(f"{base}/sigs").unionByName(
-                spark.read.parquet(f"{base}/sigs_new")
-            ),
-            n_bands,
+        _banded_pairs(bands, bands, n_bands, ham_max).write.parquet(
+            f"{stage}/pairs"
         )
-        # ONE symmetric new-vs-anything bucket join (r16, §2.4): the new
-        # doc may be the smaller or larger id of a pair, so the pre-r16
-        # form unioned both orientations — the != join + least/greatest
-        # normalization emits the identical distinct set while scanning
-        # and joining the (store ∪ batch) side once instead of twice
-        new_pairs = _banded_pairs_sym(nb, ab, n_bands, ham_max)
-        new_pairs.write.mode("append").parquet(f"{base}/pairs")
-        fs.create(appended, True).close()
 
-    return spark.read.parquet(f"{base}/pairs").orderBy("d1", "d2")
+    def build_batch(stage: str) -> None:
+        sig_compute(docs.filter(is_new)).write.parquet(f"{stage}/sigs_new")
+        new_sigs = spark.read.parquet(f"{stage}/sigs_new")
+        nb = _explode_bands(new_sigs, n_bands)
+        ab = _explode_bands(
+            spark.read.parquet(f"{base}/sigs").unionByName(new_sigs), n_bands
+        )
+        # ONE symmetric new-vs-anything bucket join: the new doc may be
+        # the smaller or larger id of a pair, and the != join +
+        # least/greatest normalization emits each pair once while
+        # scanning the (store ∪ batch) side once
+        _banded_pairs_sym(nb, ab, n_bands, ham_max).write.parquet(
+            f"{stage}/pairs_new"
+        )
+
+    build_once(spark, base, "_BASE_READY", build_base)
+    build_once(spark, base, "_APPEND_READY", build_batch)
+    return (
+        spark.read.parquet(f"{base}/pairs", f"{base}/pairs_new").orderBy("d1", "d2")
+    )
 
 
 def mm_phash_append(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1649,45 +1648,25 @@ def _mm_signatures_forget(
     hash-equality proves purge ≡ rebuild-without-the-source at O(store)
     rewrite cost. Marker-idempotent; pytest pins zero revoked doc_ids
     physically surviving in either parquet tree."""
-    from .dedup import _pair_cache_dir
-    from .text import FORGET_SOURCE
-    from ..catalog import hadoop_fs, store_intact, swap_subtrees
+    from .dedup import _pair_cache_dir, _purge_revoked
+    from ..catalog import build_then_purge
 
     docs = load_table(spark, sf_dir, "documents")
     base = _pair_cache_dir(spark, sf_dir, modality=f"{modality}-forget")
-    fs, built = hadoop_fs(spark, f"{base}/_BASE_READY")
-    # marker AND data-dir validation: an interrupted purge swap re-heals
-    # by rebuilding instead of wedging on a missing tree
-    if not store_intact(
-        spark, f"{base}/_BASE_READY", f"{base}/sigs", f"{base}/pairs"
-    ):
+
+    def build(stage: str) -> None:
         # the standing production store: the corpus was fingerprinted
         # before anyone knew the source would be revoked
-        sig_compute(docs).write.mode("overwrite").parquet(f"{base}/sigs")
-        bands = _explode_bands(spark.read.parquet(f"{base}/sigs"), n_bands)
-        _banded_pairs(bands, bands, n_bands, ham_max).write.mode(
-            "overwrite"
-        ).parquet(f"{base}/pairs")
-        _, half = hadoop_fs(spark, f"{base}/_FORGET_READY")
-        fs.delete(half, True)  # force the purge to re-run after a re-heal
-        fs.create(built, True).close()
-
-    _, purged = hadoop_fs(spark, f"{base}/_FORGET_READY")
-    if not fs.exists(purged):
-        revoked = docs.filter(F.col("source") == FORGET_SOURCE).select("doc_id")
-        kept_sigs = spark.read.parquet(f"{base}/sigs").join(
-            revoked, "doc_id", "left_anti"
+        sig_compute(docs).write.parquet(f"{stage}/sigs")
+        bands = _explode_bands(spark.read.parquet(f"{stage}/sigs"), n_bands)
+        _banded_pairs(bands, bands, n_bands, ham_max).write.parquet(
+            f"{stage}/pairs"
         )
-        kept_pairs = (
-            spark.read.parquet(f"{base}/pairs")
-            .join(revoked.select(F.col("doc_id").alias("d1")), "d1", "left_anti")
-            .join(revoked.select(F.col("doc_id").alias("d2")), "d2", "left_anti")
-        )
-        kept_sigs.write.mode("overwrite").parquet(f"{base}/sigs_next")
-        kept_pairs.write.mode("overwrite").parquet(f"{base}/pairs_next")
-        swap_subtrees(spark, base, ("sigs", "pairs"))
-        fs.create(purged, True).close()
 
+    def purge() -> None:
+        _purge_revoked(spark, base, "sigs", docs)
+
+    build_then_purge(spark, base, ("sigs", "pairs"), build, purge)
     return spark.read.parquet(f"{base}/pairs").orderBy("d1", "d2")
 
 

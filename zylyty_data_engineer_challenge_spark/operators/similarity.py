@@ -36,7 +36,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..catalog import artifact_dir, load_table
+from ..catalog import artifact_dir, build_once, load_table
 from ..oracle_utils import strip_order_by as _strip_order_by
 
 QUANT = 1000
@@ -1195,15 +1195,6 @@ _inject_bm25_oracle()
 ANN_INDEX_VERSION = 1
 
 
-def _hadoop_fs(spark: SparkSession, path: str):
-    """(FileSystem, Path) for any scheme — delegates to the shared
-    :func:`..catalog.hadoop_fs` so every durable artifact (index, format
-    migration, pair cache) uses the one existence-check code path."""
-    from ..catalog import hadoop_fs
-
-    return hadoop_fs(spark, path)
-
-
 def build_ann_index(spark: SparkSession, sf_dir: str) -> str:
     """Build and persist the IVF-PQ index of :func:`sim_ann_ivfpq`;
     returns the index directory. Idempotent per source identity: if the
@@ -1231,24 +1222,23 @@ def build_ann_index(spark: SparkSession, sf_dir: str) -> str:
     base = artifact_dir(
         spark, "annIndexDir", [f"{sf_dir}/embeddings.parquet"], f"v{ANN_INDEX_VERSION}"
     )
-    fs, marker = _hadoop_fs(spark, f"{base}/_INDEX_READY")
-    if fs.exists(marker):
-        return base
-    emb = _quantized(spark, sf_dir)
-    cents = lloyd_centroids(spark, sf_dir)
-    corpus = emb.filter(F.col("vec_id") >= N_QUERIES)
-    assign = _l2_nearest_lists(cents, corpus.select("vec_id", "q"), "vec_id", 1)
-    cb = _pq_codebook(emb)
-    (
-        _pq_encode(corpus, cb)
-        .join(assign, "vec_id")
-        .write.mode("overwrite")
-        .partitionBy("cid")
-        .parquet(f"{base}/codes")
-    )
-    cents.write.mode("overwrite").parquet(f"{base}/centroids")
-    cb.write.mode("overwrite").parquet(f"{base}/codebook")
-    fs.create(marker, True).close()
+
+    def build(stage: str) -> None:
+        emb = _quantized(spark, sf_dir)
+        cents = lloyd_centroids(spark, sf_dir)
+        corpus = emb.filter(F.col("vec_id") >= N_QUERIES)
+        assign = _l2_nearest_lists(cents, corpus.select("vec_id", "q"), "vec_id", 1)
+        cb = _pq_codebook(emb)
+        (
+            _pq_encode(corpus, cb)
+            .join(assign, "vec_id")
+            .write.partitionBy("cid")
+            .parquet(f"{stage}/codes")
+        )
+        cents.write.parquet(f"{stage}/centroids")
+        cb.write.parquet(f"{stage}/codebook")
+
+    build_once(spark, base, "_INDEX_READY", build)
     return base
 
 
@@ -1419,9 +1409,8 @@ def sim_index_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     existing cid directories (compaction territory, not rewrite).
     """
     base = build_ann_index(spark, sf_dir)
-    fs, marker = _hadoop_fs(spark, f"{base}/_INCR_READY")
-    inc = f"{base}/codes_incr"
-    if not fs.exists(marker):
+
+    def build(stage: str) -> None:
         cents = spark.read.parquet(f"{base}/centroids")
         cb = spark.read.parquet(f"{base}/codebook")
         emb = _quantized(spark, sf_dir)
@@ -1435,10 +1424,13 @@ def sim_index_append(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .join(assign, "vec_id")
                 .write.mode(mode)
                 .partitionBy("cid")
-                .parquet(inc)
+                .parquet(f"{stage}/codes_incr")
             )
-        fs.create(marker, True).close()
-    return _probe_stored(spark, sf_dir, base, spark.read.parquet(inc))
+
+    build_once(spark, base, "_INCR_READY", build)
+    return _probe_stored(
+        spark, sf_dir, base, spark.read.parquet(f"{base}/codes_incr")
+    )
 
 
 def _index_build_oracle() -> str:
@@ -1755,18 +1747,15 @@ def sim_index_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = build_ann_index(spark, sf_dir)
     # ensure the append tree exists (the thing worth compacting)
     sim_index_append(spark, sf_dir)
-    fs, marker = _hadoop_fs(spark, f"{base}/_COMPACT_READY")
-    dest = f"{base}/codes_compact"
-    if not fs.exists(marker):
-        (
-            spark.read.parquet(f"{base}/codes_incr")
-            .repartition("cid")
-            .write.mode("overwrite")
-            .partitionBy("cid")
-            .parquet(dest)
-        )
-        fs.create(marker, True).close()
-    return _probe_stored(spark, sf_dir, base, spark.read.parquet(dest))
+
+    def build(stage: str) -> None:
+        codes = spark.read.parquet(f"{base}/codes_incr").repartition("cid")
+        codes.write.partitionBy("cid").parquet(f"{stage}/codes_compact")
+
+    build_once(spark, base, "_COMPACT_READY", build)
+    return _probe_stored(
+        spark, sf_dir, base, spark.read.parquet(f"{base}/codes_compact")
+    )
 
 
 # compaction must be probe-invisible: same oracle, fourth execution path
@@ -2103,34 +2092,23 @@ def sim_index_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     off the serving path. No raw vector is read anywhere.
     """
     base = build_ann_index(spark, sf_dir)
-    fs, marker = _hadoop_fs(spark, f"{base}/_TOMBSTONES_READY")
-    if not fs.exists(marker):
-        (
-            _quantized(spark, sf_dir)
-            .filter(
-                (F.col("vec_id") >= N_QUERIES)
-                & (F.col("vec_id") % DEL_MOD == DEL_REM)
-            )
-            .select("vec_id")
-            .write.mode("overwrite")
-            .parquet(f"{base}/tombstones")
-        )
-        fs.create(marker, True).close()
 
-    _, purge_marker = _hadoop_fs(spark, f"{base}/_PURGE_READY")
-    dest = f"{base}/codes_purged"
-    if not fs.exists(purge_marker):
-        codes = spark.read.parquet(f"{base}/codes")
+    def build_tombstones(stage: str) -> None:
+        corpus = _quantized(spark, sf_dir).filter(F.col("vec_id") >= N_QUERIES)
+        tombs = corpus.filter(F.col("vec_id") % DEL_MOD == DEL_REM).select("vec_id")
+        tombs.write.parquet(f"{stage}/tombstones")
+
+    def build_purged(stage: str) -> None:
         tombs = spark.read.parquet(f"{base}/tombstones")
-        (
-            codes.join(F.broadcast(tombs), "vec_id", "left_anti")
-            .repartition("cid")
-            .write.mode("overwrite")
-            .partitionBy("cid")
-            .parquet(dest)
-        )
-        fs.create(purge_marker, True).close()
-    return _probe_stored(spark, sf_dir, base, spark.read.parquet(dest))
+        codes = spark.read.parquet(f"{base}/codes")
+        kept = codes.join(F.broadcast(tombs), "vec_id", "left_anti").repartition("cid")
+        kept.write.partitionBy("cid").parquet(f"{stage}/codes_purged")
+
+    build_once(spark, base, "_TOMBSTONES_READY", build_tombstones)
+    build_once(spark, base, "_PURGE_READY", build_purged)
+    return _probe_stored(
+        spark, sf_dir, base, spark.read.parquet(f"{base}/codes_purged")
+    )
 
 
 def sim_index_probe_deleted(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2564,26 +2542,18 @@ def build_mrl_store(spark: SparkSession, sf_dir: str) -> str:
     base = artifact_dir(
         spark, "annIndexDir", [f"{sf_dir}/embeddings.parquet"], f"v{ANN_INDEX_VERSION}"
     )
-    fs, marker = _hadoop_fs(spark, f"{base}/_MRL_READY")
-    _, cents_marker = _hadoop_fs(spark, f"{base}/_MRL_CENTS_READY")
-    need_prefix = not fs.exists(marker)
-    need_cents = not fs.exists(cents_marker)
-    if not (need_prefix or need_cents):
-        return base
-    # the coarse codebook persists BESIDE the prefixes (own marker, so a
-    # pre-centroid store upgrades in place) — the pruned probe reads it
-    # instead of re-training lloyd at query time. r14 (ADVICE): when the
-    # codebook is already persisted, the prefix-assignment RESUME path
-    # reads it back rather than retraining, so the prefixes are provably
-    # assigned with the exact codebook the pruned probe will read —
-    # correctness no longer rests on bit-exact retrain determinism
-    if need_cents:
-        cents = lloyd_centroids(spark, sf_dir)
-        cents.write.mode("overwrite").parquet(f"{base}/mrl_centroids")
-        fs.create(cents_marker, True).close()
-    else:
+
+    # the coarse codebook persists BESIDE the prefixes (own marker) —
+    # the pruned probe reads it instead of re-training lloyd at query
+    # time, and the prefixes are assigned with that stored codebook, so
+    # both read paths see the exact same centroids
+    def build_cents(stage: str) -> None:
+        lloyd_centroids(spark, sf_dir).write.parquet(f"{stage}/mrl_centroids")
+
+    build_once(spark, base, "_MRL_CENTS_READY", build_cents)
+
+    def build(stage: str) -> None:
         cents = spark.read.parquet(f"{base}/mrl_centroids")
-    if need_prefix:
         emb = _quantized(spark, sf_dir)
         corpus = emb.filter(F.col("vec_id") >= N_QUERIES)
         assign = _l2_nearest_lists(cents, corpus.select("vec_id", "q"), "vec_id", 1)
@@ -2597,11 +2567,11 @@ def build_mrl_store(spark: SparkSession, sf_dir: str) -> str:
         )
         (
             pref.join(assign, "vec_id")
-            .write.mode("overwrite")
-            .partitionBy("cid")
-            .parquet(f"{base}/mrl_prefix")
+            .write.partitionBy("cid")
+            .parquet(f"{stage}/mrl_prefix")
         )
-        fs.create(marker, True).close()
+
+    build_once(spark, base, "_MRL_READY", build)
     return base
 
 

@@ -704,17 +704,17 @@ def build_contam_index(spark: SparkSession, sf_dir: str) -> str:
     lifecycle: a new benchmark release is an APPEND installment
     (:func:`contam_index_append`), a retracted benchmark a negated one
     (:func:`contam_index_forget`), never a rebuild-the-world."""
-    from ..catalog import hadoop_fs
+    from ..catalog import build_once
     from .dedup import _pair_cache_dir
 
     base = _pair_cache_dir(spark, sf_dir, modality="contam-eval")
-    fs, marker = hadoop_fs(spark, f"{base}/_CONTAM_UNIVERSE_READY")
-    if not fs.exists(marker):
-        _eval_window_counts(
-            load_table(spark, sf_dir, "documents"),
-            F.col("doc_id") < CONTAM_EVAL_DOCS,
-        ).write.mode("overwrite").parquet(f"{base}/universe")
-        fs.create(marker, True).close()
+
+    def build(stage: str) -> None:
+        docs = load_table(spark, sf_dir, "documents")
+        universe = _eval_window_counts(docs, F.col("doc_id") < CONTAM_EVAL_DOCS)
+        universe.write.parquet(f"{stage}/universe")
+
+    build_once(spark, base, "_CONTAM_UNIVERSE_READY", build)
     return base
 
 
@@ -793,12 +793,14 @@ ORACLE_SQL["contam_index_build"] = f"""
 
 def _merged_window_counts(spark, base: str, *names: str) -> DataFrame:
     """Read-time sum-merge of the index's installment tables (the
-    :func:`..curate._merged_counts` shape on the (h, c) schema)."""
-    df = None
-    for name in names:
-        part = spark.read.parquet(f"{base}/{name}")
-        df = part if df is None else df.unionByName(part)
-    return df.groupBy("h").agg(F.sum("c").cast("long").alias("c"))
+    :func:`..curate._merged_counts` shape on the (h, c) schema); hashes
+    whose count nets to zero drop out."""
+    merged = spark.read.parquet(*(f"{base}/{name}" for name in names))
+    return (
+        merged.groupBy("h")
+        .agg(F.sum("c").cast("long").alias("c"))
+        .filter(F.col("c") > 0)
+    )
 
 
 def contam_index_append(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -808,11 +810,11 @@ def contam_index_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     APPEND_MOD == 0) installs ONLY its own counts, and reads sum-merge.
     Window hashes depend only on each document, so append ≡ full
     rebuild holds exactly — the oracle is :func:`contam_index_build`'s
-    full-universe SQL verbatim and hash-equality is the proof.
-    Installments land via :func:`..curate._staged_install` (write-aside
-    + atomic rename), so every crash point re-heals without
+    full-universe SQL verbatim and hash-equality is the proof. Each
+    installment is published by :func:`..catalog.build_once` under its
+    own ``_<NAME>_READY`` marker, so every crash point re-heals without
     double-counting."""
-    from .curate import _staged_install
+    from .curate import _install
     from .dedup import APPEND_MOD, _pair_cache_dir
 
     docs = load_table(spark, sf_dir, "documents")
@@ -820,17 +822,9 @@ def contam_index_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     is_new = F.col("doc_id") % APPEND_MOD == 0
 
     base = _pair_cache_dir(spark, sf_dir, modality="contam-batch")
-    _staged_install(
-        spark, _eval_window_counts(docs, is_eval & ~is_new), base, "base"
-    )
-    _staged_install(
-        spark, _eval_window_counts(docs, is_eval & is_new), base, "batch"
-    )
-    return (
-        _merged_window_counts(spark, base, "base", "batch")
-        .filter(F.col("c") > 0)
-        .orderBy("h")
-    )
+    _install(spark, _eval_window_counts(docs, is_eval & ~is_new), base, "base")
+    _install(spark, _eval_window_counts(docs, is_eval & is_new), base, "batch")
+    return _merged_window_counts(spark, base, "base", "batch").orderBy("h")
 
 
 # append ≡ full rebuild (window hashes are per-document): same oracle
@@ -850,7 +844,7 @@ def contam_index_forget(spark: SparkSession, sf_dir: str) -> DataFrame:
     end-to-end: the oracle is the excise SQL with the eval set narrowed
     to the surviving releases — unlearning must be indistinguishable
     from never having indexed the retracted benchmark."""
-    from .curate import _staged_install
+    from .curate import _install
     from .dedup import _pair_cache_dir
 
     docs = load_table(spark, sf_dir, "documents")
@@ -864,16 +858,12 @@ def contam_index_forget(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = _pair_cache_dir(
         spark, sf_dir, modality=f"contam-unlearn-m{CONTAM_RETRACT_MOD}"
     )
-    _staged_install(spark, _eval_window_counts(docs, is_eval), base, "base")
+    _install(spark, _eval_window_counts(docs, is_eval), base, "base")
     negated = _eval_window_counts(docs, retracted).select(
         "h", (-F.col("c")).cast("long").alias("c")
     )
-    _staged_install(spark, negated, base, "revoked")
-    surviving = (
-        _merged_window_counts(spark, base, "base", "revoked")
-        .filter(F.col("c") > 0)
-        .select("h")
-    )
+    _install(spark, negated, base, "revoked")
+    surviving = _merged_window_counts(spark, base, "base", "revoked").select("h")
     # size-guarded hint (the surviving set is a subset of the base
     # installment, so its on-disk size bounds the broadcast)
     if _universe_fits_broadcast(spark, f"{base}/base"):
@@ -917,28 +907,15 @@ def contam_index_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     Registered and graded from r15 (the window rotation slot the r14
     saturation forced — see __spark_entry__ and COVERAGE.md).
     """
-    import hashlib
-
-    from ..catalog import hadoop_fs
-    from .curate import _installed_names
+    from .curate import _compact_installments
     from .dedup import _pair_cache_dir
 
     base = _pair_cache_dir(spark, sf_dir, modality="contam-batch")
     contam_index_append(spark, sf_dir)  # ensure the installments exist
-    names = _installed_names(spark, base)
-    manifest = hashlib.sha1("|".join(names).encode()).hexdigest()[:12]
-    fs, marker = hadoop_fs(spark, f"{base}/_COMPACT_{manifest}_READY")
-    dest = f"{base}/counts_compact"
-    if not fs.exists(marker):
-        (
-            _merged_window_counts(spark, base, *names)
-            .filter(F.col("c") > 0)
-            .repartition(CONTAM_COMPACT_FILES)
-            .write.mode("overwrite")
-            .parquet(dest)
-        )
-        fs.create(marker, True).close()
-    return spark.read.parquet(dest).select("h", "c").orderBy("h")
+    _compact_installments(spark, base, _merged_window_counts, CONTAM_COMPACT_FILES)
+    return (
+        spark.read.parquet(f"{base}/counts_compact").select("h", "c").orderBy("h")
+    )
 
 
 # compaction is a pure layout change: same oracle, third execution path
@@ -1469,6 +1446,38 @@ ORACLE_SQL["text_lm_score"] = f"""
 """
 
 
+def _lm_counts(docs: DataFrame) -> DataFrame:
+    """The (w1, w2, c12) bigram counts of ``docs``: one model installment."""
+    return _lm_bigrams(docs).groupBy("w1", "w2").agg(
+        F.count("*").cast("bigint").alias("c12")
+    )
+
+
+def _lm_append_c12(spark: SparkSession, sf_dir: str, docs: DataFrame) -> DataFrame:
+    """The merged (w1, w2, c12) model of the append store, building its
+    base installment (doc_id % APPEND_MOD != 0) and batch installment
+    (``c12_new``) if absent."""
+    from ..catalog import build_once
+    from .dedup import APPEND_MOD, _pair_cache_dir
+
+    is_new = F.col("doc_id") % APPEND_MOD == 0
+    base = _pair_cache_dir(spark, sf_dir, modality="lm-append-inst")
+
+    def build_base(stage: str) -> None:
+        _lm_counts(docs.filter(~is_new)).write.parquet(f"{stage}/c12")
+
+    def build_batch(stage: str) -> None:
+        _lm_counts(docs.filter(is_new)).write.parquet(f"{stage}/c12_new")
+
+    build_once(spark, base, "_BASE_READY", build_base)
+    build_once(spark, base, "_APPEND_READY", build_batch)
+    return (
+        spark.read.parquet(f"{base}/c12", f"{base}/c12_new")
+        .groupBy("w1", "w2")
+        .agg(F.sum("c12").cast("bigint").alias("c12"))
+    )
+
+
 def text_lm_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incremental LM maintenance — the *model tables as a persisted,
     append-many artifact* (the docstring promise of
@@ -1486,42 +1495,18 @@ def text_lm_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     c_union(w1,w2) = c_base + c_batch, V_union = |contexts of the merged
     c1| — so the oracle is :func:`text_lm_score`'s full-rebuild SQL
     verbatim and hash-equality proves the incremental model serves the
-    identical scores. Marker-idempotent: a re-run appends nothing.
+    identical scores. The batch's counts are their own installment
+    child (``c12_new``) beside the base's ``c12``, so a re-run appends
+    nothing, even after the marker is lost.
 
     Scale: the daily cost is O(batch) bigram counting + the merge read;
     the full retrain this replaces is corpus-sized. Scoring cost is
     unchanged (two model joins).
     """
-    from ..catalog import hadoop_fs
-    from .dedup import APPEND_MOD, _pair_cache_dir
-
     docs = load_table(spark, sf_dir, "documents")
-    is_new = F.col("doc_id") % APPEND_MOD == 0
-
-    base = _pair_cache_dir(spark, sf_dir, modality="lm-append")
-    fs, base_marker = hadoop_fs(spark, f"{base}/_BASE_READY")
-    if not fs.exists(base_marker):
-        bg0 = _lm_bigrams(docs.filter(~is_new))
-        bg0.groupBy("w1", "w2").agg(
-            F.count("*").cast("bigint").alias("c12")
-        ).write.mode("overwrite").parquet(f"{base}/c12")
-        fs.create(base_marker, True).close()
-
-    _, appended = hadoop_fs(spark, f"{base}/_APPEND_READY")
-    if not fs.exists(appended):
-        bgn = _lm_bigrams(docs.filter(is_new))
-        bgn.groupBy("w1", "w2").agg(
-            F.count("*").cast("bigint").alias("c12")
-        ).write.mode("append").parquet(f"{base}/c12")
-        fs.create(appended, True).close()
-
     # read-time sum-merge of the stored partial counts; c1 and V derive
     # from the merged c12, so the model stays one stored table
-    c12 = (
-        spark.read.parquet(f"{base}/c12")
-        .groupBy("w1", "w2")
-        .agg(F.sum("c12").cast("bigint").alias("c12"))
-    )
+    c12 = _lm_append_c12(spark, sf_dir, docs)
     c1 = c12.groupBy("w1").agg(F.sum("c12").cast("bigint").alias("c1"))
     return _lm_score_against(_lm_bigrams(docs), c12, c1)
 
@@ -1550,30 +1535,24 @@ def text_lm_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     (:func:`text_lm_append`) → compact — the same
     build/append/compact arc the ANN index and the pair stores carry.
     """
-    from ..catalog import hadoop_fs
+    from ..catalog import build_once
     from .dedup import _pair_cache_dir
 
-    base = _pair_cache_dir(spark, sf_dir, modality="lm-append")
-    text_lm_append(spark, sf_dir)  # ensure base + append exist
-    fs, marker = hadoop_fs(spark, f"{base}/_C12_COMPACT_READY")
-    dest = f"{base}/c12_compact"
-    if not fs.exists(marker):
-        (
-            spark.read.parquet(f"{base}/c12")
-            .groupBy("w1", "w2")
-            .agg(F.sum("c12").cast("bigint").alias("c12"))
-            .withColumn(
-                "bucket", F.expr(f"pmod(hash(w1), {LM_COMPACT_BUCKETS})")
-            )
-            .repartition("bucket")
-            .write.mode("overwrite")
-            .partitionBy("bucket")
-            .parquet(dest)
-        )
-        fs.create(marker, True).close()
-    c12 = spark.read.parquet(dest).select("w1", "w2", "c12")
-    c1 = c12.groupBy("w1").agg(F.sum("c12").cast("bigint").alias("c1"))
     docs = load_table(spark, sf_dir, "documents")
+    base = _pair_cache_dir(spark, sf_dir, modality="lm-append-inst")
+
+    def build(stage: str) -> None:
+        (
+            _lm_append_c12(spark, sf_dir, docs)
+            .withColumn("bucket", F.expr(f"pmod(hash(w1), {LM_COMPACT_BUCKETS})"))
+            .repartition("bucket")
+            .write.partitionBy("bucket")
+            .parquet(f"{stage}/c12_compact")
+        )
+
+    build_once(spark, base, "_C12_COMPACT_READY", build)
+    c12 = spark.read.parquet(f"{base}/c12_compact").select("w1", "w2", "c12")
+    c1 = c12.groupBy("w1").agg(F.sum("c12").cast("bigint").alias("c1"))
     return _lm_score_against(_lm_bigrams(docs), c12, c1)
 
 
@@ -1990,15 +1969,15 @@ def build_bpe_vocab(spark: SparkSession, sf_dir: str) -> str:
     serve path). :func:`text_bpe_train` remains the in-plan TRAINING op
     by definition. Returns the store directory; store-served ≡ in-plan
     is hash-pinned (tests/test_r14_ops.py)."""
-    from ..catalog import hadoop_fs
+    from ..catalog import build_once
     from .dedup import _pair_cache_dir
 
     base = _pair_cache_dir(spark, sf_dir, modality="bpe-vocab")
-    fs, marker = hadoop_fs(spark, f"{base}/_BPE_VOCAB_READY")
-    if not fs.exists(marker):
-        _, vocab = _bpe_trained(spark, sf_dir)
-        vocab.write.mode("overwrite").parquet(f"{base}/vocab")
-        fs.create(marker, True).close()
+
+    def build(stage: str) -> None:
+        _bpe_trained(spark, sf_dir)[1].write.parquet(f"{stage}/vocab")
+
+    build_once(spark, base, "_BPE_VOCAB_READY", build)
     return base
 
 
@@ -2125,8 +2104,8 @@ def text_lm_forget(spark: SparkSession, sf_dir: str) -> DataFrame:
     revoked (licensing, takedown, contamination) and its contribution
     must leave the persisted model WITHOUT a corpus-sized retrain.
     Because the model state is additive counts, unlearning is exact
-    subtraction: the revoked source's own bigram counts are appended
-    NEGATED into the partial-count tree (one O(revoked-source) pass),
+    subtraction: the revoked source's own bigram counts are installed
+    NEGATED as the ``c12_revoked`` child (one O(revoked-source) pass),
     the read-time sum-merge cancels them, and rows that net to zero are
     dropped — so the merged model is BIT-EQUAL to retraining on the
     surviving corpus (vocabulary and smoothing V included: a context
@@ -2140,33 +2119,32 @@ def text_lm_forget(spark: SparkSession, sf_dir: str) -> DataFrame:
     read — the full retrain this replaces is corpus-sized; the same
     asymmetry as :func:`text_lm_append`, pointed backwards.
     """
-    from ..catalog import hadoop_fs
+    from ..catalog import build_once
     from .dedup import _pair_cache_dir
 
     docs = load_table(spark, sf_dir, "documents")
     revoked = F.col("source") == FORGET_SOURCE
 
-    base = _pair_cache_dir(spark, sf_dir, modality="lm-forget")
-    fs, built = hadoop_fs(spark, f"{base}/_BASE_READY")
-    if not fs.exists(built):
+    base = _pair_cache_dir(spark, sf_dir, modality="lm-forget-inst")
+
+    def build_base(stage: str) -> None:
         # the standing production model: trained on EVERYTHING, before
         # anyone knew the source would be revoked
-        _lm_bigrams(docs).groupBy("w1", "w2").agg(
-            F.count("*").cast("bigint").alias("c12")
-        ).write.mode("overwrite").parquet(f"{base}/c12")
-        fs.create(built, True).close()
+        _lm_counts(docs).write.parquet(f"{stage}/c12")
 
-    _, forgotten = hadoop_fs(spark, f"{base}/_FORGET_READY")
-    if not fs.exists(forgotten):
-        _lm_bigrams(docs.filter(revoked)).groupBy("w1", "w2").agg(
-            (-F.count("*")).cast("bigint").alias("c12")
-        ).write.mode("append").parquet(f"{base}/c12")
-        fs.create(forgotten, True).close()
+    def build_revoked(stage: str) -> None:
+        negated = _lm_counts(docs.filter(revoked)).select(
+            "w1", "w2", (-F.col("c12")).alias("c12")
+        )
+        negated.write.parquet(f"{stage}/c12_revoked")
+
+    build_once(spark, base, "_BASE_READY", build_base)
+    build_once(spark, base, "_FORGET_READY", build_revoked)
 
     # read-time sum-merge; exact cancellation drops the revoked mass and
     # any context/bigram the source alone contributed
     c12 = (
-        spark.read.parquet(f"{base}/c12")
+        spark.read.parquet(f"{base}/c12", f"{base}/c12_revoked")
         .groupBy("w1", "w2")
         .agg(F.sum("c12").cast("bigint").alias("c12"))
         .filter(F.col("c12") > 0)

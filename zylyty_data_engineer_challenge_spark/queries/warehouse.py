@@ -1159,13 +1159,13 @@ def q_snapshot_expire(spark: SparkSession, sf_dir: str) -> DataFrame:
     O(1) filesystem metadata per version; every later read prunes to
     the retained partitions (version is the partition column).
     """
-    from ..catalog import hadoop_fs
+    from ..catalog import build_once, hadoop_fs
     from ..operators.dedup import _pair_cache_dir
 
     base = _pair_cache_dir(spark, sf_dir, modality="snapshots", src="events.parquet")
     store = f"{base}/state"
-    fs, built = hadoop_fs(spark, f"{base}/_STATE_READY")
-    if not fs.exists(built):
+
+    def build(stage: str) -> None:
         versions = spark.createDataFrame(
             [(v, d) for v, d in TT_VERSIONS], "version string, cut_date string"
         ).select("version", F.to_timestamp("cut_date").alias("cut"))
@@ -1205,20 +1205,18 @@ def q_snapshot_expire(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ).alias("deleted"),
             )
         )
-        state.repartition("version").write.mode("overwrite").partitionBy(
-            "version"
-        ).parquet(store)
-        fs.create(built, True).close()
+        state.repartition("version").write.partitionBy("version").parquet(
+            f"{stage}/state"
+        )
 
+    build_once(spark, base, "_STATE_READY", build)
+    # expiry is idempotent on its own: one exists call per expired version
     retained = sorted(v for v, _ in TT_VERSIONS)[-SNAP_RETAIN:]
-    _, expired = hadoop_fs(spark, f"{base}/_EXPIRE_READY")
-    if not fs.exists(expired):
-        for v, _ in TT_VERSIONS:
-            if v not in retained:
-                part, gone = hadoop_fs(spark, f"{store}/version={v}")
-                if part.exists(gone):
-                    part.delete(gone, True)
-        fs.create(expired, True).close()
+    for v, _ in TT_VERSIONS:
+        if v not in retained:
+            fs, gone = hadoop_fs(spark, f"{store}/version={v}")
+            if fs.exists(gone):
+                fs.delete(gone, True)
 
     snaps = spark.read.parquet(store)
     return (
@@ -1292,12 +1290,12 @@ def q_zorder_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     at 100 TB the same write pattern is the difference between a box
     query reading one file and reading the fleet.
     """
-    from ..catalog import hadoop_fs
+    from ..catalog import build_once
 
     base = artifact_dir(spark, "formatDir", [f"{sf_dir}/orders.parquet"], "zorder")
     base += "/orders_zorder"
-    fs, marker = hadoop_fs(spark, f"{base}/_ZORDER_READY")
-    if not fs.exists(marker):
+
+    def build(stage: str) -> None:
         orders = load_table(spark, sf_dir, "orders")
         code = _morton_expr("cb", "db")
         (
@@ -1312,10 +1310,10 @@ def q_zorder_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select("o_custkey", "o_totalprice", "cb", "db", F.expr(code).alias("zval"))
             .repartitionByRange(ZORDER_FILES, "zval")
             .sortWithinPartitions("zval")
-            .write.mode("overwrite")
-            .parquet(f"{base}/data")
+            .write.parquet(f"{stage}/data")
         )
-        fs.create(marker, True).close()
+
+    build_once(spark, base, "_ZORDER_READY", build)
 
     z_lo = _morton_py(ZPROBE_CUST[0], ZPROBE_DAY[0])
     z_hi = _morton_py(ZPROBE_CUST[1], ZPROBE_DAY[1])

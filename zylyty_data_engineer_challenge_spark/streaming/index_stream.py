@@ -16,7 +16,6 @@ from ..operators.similarity import (
     N_QUERIES,
     QUANT,
     ORACLE_SQL as _SIM_ORACLE,
-    _hadoop_fs,
     _l2_nearest_lists,
     _pq_encode,
     _probe_stored,

@@ -35,7 +35,7 @@ from ..operators.lexical import LEXICAL_INDEX_VERSION, _index_tables, _probe_lex
 def stream_bm25_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Assemble the lexical index across three micro-batches, then serve
     the benchmark query from the streamed store."""
-    from ..catalog import artifact_dir, hadoop_fs
+    from ..catalog import artifact_dir, build_once
     from ..schemas import DOCUMENTS
     from .views_stream import _stream_conf
 
@@ -45,18 +45,14 @@ def stream_bm25_append(spark: SparkSession, sf_dir: str) -> DataFrame:
         [f"{sf_dir}/documents.parquet"],
         f"stream-bm25-v{LEXICAL_INDEX_VERSION}",
     )
-    fs, staged = hadoop_fs(spark, f"{base}/_INCOMING_READY")
 
     # stage the corpus as THREE files once per identity, so the stream
     # genuinely runs three micro-batches (split-invariance is the claim)
-    if not fs.exists(staged):
-        (
-            spark.read.parquet(f"{sf_dir}/documents.parquet")
-            .repartition(3)
-            .write.mode("overwrite")
-            .parquet(f"{base}/incoming")
-        )
-        fs.create(staged, True).close()
+    def stage_incoming(stage: str) -> None:
+        docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+        docs.repartition(3).write.parquet(f"{stage}/incoming")
+
+    build_once(spark, base, "_INCOMING_READY", stage_incoming)
 
     def absorb_batch(batch_df: DataFrame, batch_id: int) -> None:
         # tokenize the batch EXACTLY ONCE (r16, guide §4.5/§2.3): the

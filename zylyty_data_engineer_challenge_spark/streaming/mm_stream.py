@@ -66,7 +66,7 @@ def _mm_stream_append(
     bucket join with output-bounded verify — continuous media ingestion
     at whatever cadence the trigger sets, never corpus x corpus.
     """
-    from ..catalog import artifact_dir, hadoop_fs
+    from ..catalog import artifact_dir, build_once, hadoop_fs
     from ..schemas import DOCUMENTS
     from .views_stream import _stream_conf
 
@@ -80,15 +80,11 @@ def _mm_stream_append(
 
     # stage the corpus as THREE files once per identity, so the stream
     # genuinely runs three micro-batches (split-invariance is the claim)
-    _, staged = hadoop_fs(spark, f"{base}/_INCOMING_READY")
-    if not fs.exists(staged):
-        (
-            spark.read.parquet(f"{sf_dir}/documents.parquet")
-            .repartition(3)
-            .write.mode("overwrite")
-            .parquet(f"{base}/incoming")
-        )
-        fs.create(staged, True).close()
+    def stage_incoming(stage: str) -> None:
+        docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+        docs.repartition(3).write.parquet(f"{stage}/incoming")
+
+    build_once(spark, base, "_INCOMING_READY", stage_incoming)
 
     def absorb_batch(batch_df: DataFrame, batch_id: int) -> None:
         # decode+fingerprint the batch EXACTLY ONCE (r16, guide §4.5/§1):
