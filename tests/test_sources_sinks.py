@@ -10,6 +10,7 @@ from __future__ import annotations
 
 import contextlib
 import json
+import re
 import threading
 from decimal import Decimal
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
@@ -23,11 +24,7 @@ from zylyty_data_engineer_challenge_spark.schemas import ACCOUNTS, CLIENTS
 from zylyty_data_engineer_challenge_spark.sinks import jdbc as jdbc_sink
 from zylyty_data_engineer_challenge_spark.sources import rest_pages
 from zylyty_data_engineer_challenge_spark.sources.http_csv import fetch_csv
-from zylyty_data_engineer_challenge_spark.sources.rest_pages import (
-    HAS_DATASOURCE_API,
-    read_transactions,
-    read_transactions_fallback,
-)
+from zylyty_data_engineer_challenge_spark.sources.rest_pages import parse_pages, read_transactions
 
 TOKEN = "test-token"
 N_TX = 230  # 3 pages at limit=100: 100 + 100 + 30
@@ -190,39 +187,53 @@ def test_fetch_csv_arrow_path_edge_cells(spark, api_server):
 
 
 # ---------------------------------------------------------------------------
-# S3/S4 — both the partitioned data source and the fallback loop
+# S3/S4 — driver-side fetch, JVM-side parse
 # ---------------------------------------------------------------------------
 
 
-@pytest.mark.parametrize("reader", [read_transactions, read_transactions_fallback])
-def test_rest_pages_reads_all(spark, api_server, reader):
-    df = reader(spark, api_server, TOKEN, limit=PAGE_LIMIT, max_pages=10)
+def _expected_rows(n_tx: int) -> list[tuple]:
+    """The fixture feed's raw rows, as the reader must return them."""
+    import datetime as dt
+
+    return [
+        (
+            t["transaction_id"],
+            dt.datetime.fromisoformat(t["timestamp"]),
+            t["account_id"],
+            t["amount"],
+            t["type"],
+            t["medium"],
+            i,
+        )
+        for i, t in enumerate(_tx(i) for i in range(n_tx))
+    ]
+
+
+def test_rest_pages_reads_all(spark, api_server):
+    df = read_transactions(spark, api_server, TOKEN, limit=PAGE_LIMIT, max_pages=10)
     rows = df.collect()
     assert len(rows) == N_TX
     by_id = {r.transaction_id: r for r in rows}
-    # envelope page (0) and bare-array page (1) both parsed
+    # envelope pages (0, 2) and the bare-array page (1) are all parsed
     assert by_id[5].amount == "5.25"
     assert by_id[107].amount == "garbage"  # raw string survives to cleaning
-    assert by_id[150].account_id == 151 % 3 + 1 - 1 or by_id[150] is not None
+    assert by_id[229].account_id == 229 % 3 + 1
     # arrival ordinal is page*limit + idx == transaction id here
     assert all(r._arrival == r.transaction_id for r in rows)
     assert by_id[23].timestamp.month == 3
-
-
-def test_rest_pages_partitioned_parallelism(spark, api_server):
-    df = read_transactions(spark, api_server, TOKEN, limit=PAGE_LIMIT, max_pages=10)
-    assert df.rdd.getNumPartitions() == min(spark.sparkContext.defaultParallelism, 11)
-    assert df.count() == N_TX
+    assert [(f.name, f.dataType) for f in df.schema] == [
+        (f.name, f.dataType) for f in rest_pages.TRANSACTIONS_RAW
+    ]
 
 
 @pytest.mark.parametrize(
     "n_tx", [2 * PAGE_LIMIT + 30, 3 * PAGE_LIMIT], ids=["short_last_page", "full_last_page"]
 )
 def test_rest_pages_strided_reads(spark, n_tx):
-    """Partition i of k reads pages i, i+k, ... and stops at its first short
-    page: the rows equal the serial loop's, and each partition fetches at
-    most one page past the feed's end. A feed whose last page is full ends
-    on an empty page."""
+    """``k`` requests stay in flight, so slot i of k reads pages i, i+k, ...;
+    the rows equal the feed's in arrival order, the feed's end costs at most
+    k - 1 requests past its end page, and the flaky page is retried once. A
+    feed whose last page is full ends on an empty page."""
     max_pages = 10
     pages = n_tx // PAGE_LIMIT + 1  # the serial loop's fetches, end page included
     k = min(spark.sparkContext.defaultParallelism, max_pages + 1)
@@ -233,21 +244,145 @@ def test_rest_pages_strided_reads(spark, n_tx):
 
     Handler.n_tx = n_tx
     with _serve(Handler) as url:
-        df = read_transactions(spark, url, TOKEN, limit=PAGE_LIMIT, max_pages=max_pages)
-        assert df.rdd.getNumPartitions() == k
-        got = sorted(df.collect(), key=lambda r: r._arrival)
-        seen = list(Handler.tx_requests)
-        want = sorted(
-            read_transactions_fallback(spark, url, TOKEN, limit=PAGE_LIMIT, max_pages=max_pages)
-            .collect(),
+        got = sorted(
+            read_transactions(spark, url, TOKEN, limit=PAGE_LIMIT, max_pages=max_pages).collect(),
             key=lambda r: r._arrival,
         )
-    assert [tuple(r) for r in got] == [tuple(r) for r in want]
-    assert len(got) == n_tx and [r._arrival for r in got] == list(range(n_tx))
-    # every partition but the end page's fetches one page past it (k - 1
-    # requests); the flaky page's retry is one more
-    assert len(seen) <= pages + k
-    assert seen.count((1, 503)) == 1 and (1, 200) in seen
+        seen = list(Handler.tx_requests)
+    assert [tuple(r) for r in got] == _expected_rows(n_tx)
+    retries = seen.count((1, 503))
+    assert retries == 1 and (1, 200) in seen
+    assert len(seen) <= pages + k - 1 + retries
+
+
+class _ShortThenFullHandler(_ApiHandler):
+    """Page 1 is short; page 2 is full again, and page 3 fails."""
+
+    flaky_failures: dict = {}
+    tx_requests: list = []
+
+    def do_GET(self):  # noqa: N802
+        url = urlparse(self.path)
+        page = int(parse_qs(url.query).get("page", ["0"])[0])
+        self.tx_requests.append(page)
+        if page == 3:
+            self._send(500, b'{"error": "boom"}')
+            return
+        size = {0: PAGE_LIMIT, 1: 7}.get(page, PAGE_LIMIT)
+        start = page * PAGE_LIMIT
+        self._send(200, json.dumps([_tx(i) for i in range(start, start + size)]).encode())
+
+
+def test_rest_pages_stop_at_first_short_page(spark, monkeypatch):
+    """Like the reference's serial loop (main.py:111-112), the read ends at
+    the first short page in page order: a full page after it is discarded,
+    and so is an error from a later page."""
+    monkeypatch.setattr(rest_pages.time, "sleep", lambda s: None)
+    _ShortThenFullHandler.tx_requests = []
+    with _serve(_ShortThenFullHandler) as url:
+        rows = read_transactions(spark, url, TOKEN, limit=PAGE_LIMIT, max_pages=10).collect()
+    assert sorted(r._arrival for r in rows) == list(range(PAGE_LIMIT + 7))
+    assert sorted(r.transaction_id for r in rows) == list(range(PAGE_LIMIT)) + list(
+        range(PAGE_LIMIT, PAGE_LIMIT + 7)
+    )
+
+
+def _parse(spark, bodies: list, limit: int = PAGE_LIMIT) -> list:
+    """``parse_pages`` over one page per JSON body, rows in arrival order."""
+    import pyarrow as pa
+
+    raw = spark.createDataFrame(pa.table({
+        "page": pa.array(range(len(bodies)), pa.int64()),
+        "body": pa.array([json.dumps(b).encode() for b in bodies], pa.binary()),
+    }))
+    return sorted(parse_pages(raw, limit).collect(), key=lambda r: r._arrival)
+
+
+def _py_parse_ts(v):
+    """The Python timestamp rule the JVM parse replaced: a number is epoch
+    seconds, a string is ``datetime.fromisoformat`` with ``Z`` read as UTC
+    and offsets normalized to UTC-naive, anything unparseable is None."""
+    import datetime as dt
+
+    if v is None or v == "":
+        return None
+    if isinstance(v, (int, float)):
+        return dt.datetime.fromtimestamp(v, dt.timezone.utc).replace(tzinfo=None)
+    try:
+        parsed = dt.datetime.fromisoformat(str(v).replace("Z", "+00:00"))
+    except ValueError:
+        return None
+    if parsed.tzinfo is not None:
+        parsed = parsed.astimezone(dt.timezone.utc).replace(tzinfo=None)
+    return parsed
+
+
+def test_parse_ts_formats(spark):
+    """ISO-8601 variants incl. offsets normalize to UTC-naive; a JSON number
+    is epoch seconds; junk, ``""`` and an epoch written as a JSON string
+    become NULL, as in the Python rule. The JVM parse differs on four
+    values, pinned below."""
+    import datetime as dt
+
+    same = [
+        ("2024-05-01T10:00:00", dt.datetime(2024, 5, 1, 10)),
+        ("2024-05-01 10:00:00.250000", dt.datetime(2024, 5, 1, 10, 0, 0, 250000)),
+        ("2024-05-01T10:00:00Z", dt.datetime(2024, 5, 1, 10)),
+        ("2024-05-01T12:00:00+02:00", dt.datetime(2024, 5, 1, 10)),
+        ("2024-05-01", dt.datetime(2024, 5, 1)),
+        (1714557600, dt.datetime(2024, 5, 1, 10)),
+        (1714557600.5, dt.datetime(2024, 5, 1, 10, 0, 0, 500000)),
+        ("not a date", None),
+        (None, None),
+        ("", None),
+        ("1714557600", None),
+    ]
+    # value, JVM result, Python result
+    changed = [
+        ("2024", dt.datetime(2024, 1, 1), None),  # a bare year is a date
+        (" 2024-05-01 ", dt.datetime(2024, 5, 1), None),  # surrounding blanks trimmed
+        ("20240501T100000", None, dt.datetime(2024, 5, 1, 10)),  # basic format
+        (True, None, dt.datetime(1970, 1, 1, 0, 0, 1)),  # a boolean is not epoch 1
+    ]
+    values = [v for v, _ in same] + [v for v, _, _ in changed]
+    rows = _parse(spark, [[{"timestamp": v} for v in values]])
+    got = [r.timestamp for r in rows]
+    assert got == [want for _, want in same] + [jvm for _, jvm, _ in changed]
+    assert [_py_parse_ts(v) for v, _ in same] == [want for _, want in same]
+    assert [_py_parse_ts(v) for v, _, _ in changed] == [py for _, _, py in changed]
+
+
+def test_parse_pages_value_table(spark):
+    """Ids, amounts, type/medium and the three body shapes against the
+    Python row rule (``int(id)``, ``str(amount)``, values as-is)."""
+    records = [
+        {"transaction_id": 1, "account_id": 2, "amount": None, "type": "dep", "medium": "card"},
+        {"transaction_id": "3", "account_id": "4", "amount": "", "type": None},
+        {"transaction_id": 5, "account_id": 6, "amount": "garbage", "medium": "cash"},
+        {"transaction_id": 7, "account_id": 8, "amount": 12.5},
+        {"transaction_id": None, "amount": 100},
+        # an id that is neither a number nor a numeric string made the
+        # Python rule raise (int("x1")) and fail the read; it is NULL now
+        {"transaction_id": "x1", "account_id": "", "amount": "1e3"},
+    ]
+    bodies = [
+        {"results": records[:3]},  # envelope
+        records[3:],  # bare array
+        {"data": records},  # a dict without results: no rows
+        {"results": None},  # results that is not a list: no rows
+    ]
+    rows = _parse(spark, bodies)
+    assert [tuple(r) for r in rows] == [
+        (1, None, 2, None, "dep", "card", 0),
+        (3, None, 4, "", None, None, 1),
+        (5, None, 6, "garbage", None, "cash", 2),
+        (7, None, 8, "12.5", None, None, PAGE_LIMIT),
+        (None, None, None, "100", None, None, PAGE_LIMIT + 1),
+        (None, None, None, "1e3", None, None, PAGE_LIMIT + 2),
+    ]
+    assert rest_pages._unwrap(bodies[0]) == records[:3]
+    assert rest_pages._unwrap(bodies[1]) == records[3:]
+    assert rest_pages._unwrap(bodies[2]) == rest_pages._unwrap(bodies[3]) == []
 
 
 # ---------------------------------------------------------------------------
@@ -260,7 +395,7 @@ def test_jdbc_roundtrip_and_view_ddl(spark, api_server, derby_url):
 
     accounts = fetch_csv(spark, api_server, "accounts", TOKEN, ACCOUNTS)
     tx = clean_transactions(
-        read_transactions_fallback(spark, api_server, TOKEN, limit=PAGE_LIMIT, max_pages=10)
+        read_transactions(spark, api_server, TOKEN, limit=PAGE_LIMIT, max_pages=10)
     )
     written = jdbc_sink.insert_data_to_tables(
         {"accounts": accounts, "transactions": tx,
@@ -307,7 +442,6 @@ def test_run_pipeline_completion_line(spark, api_server, derby_url, capsys):
         admin_api_key=TOKEN,
         jdbc_url=f"{derby_url.replace('testdb', 'pipedb')}",
         push_views=False,  # reference DDL is PG-dialect; Derby can't run it
-        use_datasource=True,
     )
     written = run_pipeline(spark, cfg)
     out = capsys.readouterr().out
@@ -319,21 +453,102 @@ def test_run_pipeline_completion_line(spark, api_server, derby_url, capsys):
     assert spark.table("transactions").count() == written["transactions"]
 
 
-def test_parse_ts_formats():
-    """ISO-8601 variants incl. offsets normalize to UTC-naive; junk -> None."""
-    import datetime as dt
+def _derby_counts(spark, url: str) -> dict[str, int]:
+    """``COUNT(*)`` of each pipeline table that exists in the database."""
+    conn = spark._jvm.java.sql.DriverManager.getConnection(url)
+    try:
+        meta, stmt, counts = conn.getMetaData(), conn.createStatement(), {}
+        for t in ("clients", "accounts", "transactions"):
+            if meta.getTables(None, None, t.upper(), None).next():
+                rs = stmt.executeQuery(f"SELECT COUNT(*) FROM {t}")
+                rs.next()
+                counts[t] = rs.getLong(1)
+        return counts
+    finally:
+        conn.close()
 
-    from zylyty_data_engineer_challenge_spark.sources.rest_pages import _parse_ts
 
-    assert _parse_ts("2024-05-01T10:00:00") == dt.datetime(2024, 5, 1, 10)
-    assert _parse_ts("2024-05-01 10:00:00.250000") == dt.datetime(2024, 5, 1, 10, 0, 0, 250000)
-    assert _parse_ts("2024-05-01T10:00:00Z") == dt.datetime(2024, 5, 1, 10)
-    assert _parse_ts("2024-05-01T12:00:00+02:00") == dt.datetime(2024, 5, 1, 10)
-    assert _parse_ts("2024-05-01") == dt.datetime(2024, 5, 1)
-    assert _parse_ts(1714557600) == dt.datetime(2024, 5, 1, 10)
-    assert _parse_ts("not a date") is None
-    assert _parse_ts(None) is None
-    assert _parse_ts("") is None
+def test_pipeline_counts_match_derby_and_plans_have_no_python(spark, api_server, derby_url):
+    """Every written count is the table's row count in the database, and no
+    pipeline frame plans a Python node: the sources hand the JVM Arrow
+    frames and the JVM parses the feed."""
+    url = derby_url.replace("testdb", "countdb")
+    written = run_pipeline(
+        spark, PipelineConfig(api_base_url=api_server, admin_api_key=TOKEN, jdbc_url=url,
+                              push_views=False)
+    )
+    assert _derby_counts(spark, url) == written == {
+        "accounts": 3, "clients": 2, "transactions": N_TX_CLEAN,
+    }
+    for t in written:
+        plan = spark.table(t)._jdf.queryExecution().executedPlan().toString()
+        assert not re.search(r"Python|MapInPandas|MapInArrow|ArrowEval", plan), plan
+
+
+class _OneSourceEmptyHandler(_ApiHandler):
+    """The fixture API with one dataset empty: clients is a header-only CSV,
+    accounts fails with a 500, transactions is an empty envelope."""
+
+    empty = ""
+    flaky_failures: dict = {}
+    tx_requests: list = []
+
+    def do_GET(self):  # noqa: N802
+        path = urlparse(self.path).path
+        if self.empty == "clients" and path == "/download/clients.csv":
+            self._send(200, CLIENTS_CSV.split("\n")[0].encode() + b"\n", "text/csv")
+        elif self.empty == "accounts" and path == "/download/accounts.csv":
+            self._send(500, b"boom", "text/plain")
+        elif self.empty == "transactions" and path == "/transactions":
+            self._send(200, b'{"results": []}')
+        else:
+            super().do_GET()
+
+
+@pytest.mark.parametrize("empty", ["clients", "accounts", "transactions"])
+def test_k1_empty_source_creates_no_table(spark, derby_url, empty):
+    """K1 (main.py:131-136): an empty dataset creates no table and writes 0;
+    the other two tables are written in full."""
+
+    class Handler(_OneSourceEmptyHandler):
+        pass
+
+    Handler.empty = empty
+    url = derby_url.replace("testdb", f"k1{empty}db")
+    with _serve(Handler) as api:
+        written = run_pipeline(
+            spark, PipelineConfig(api_base_url=api, admin_api_key=TOKEN, jdbc_url=url,
+                                  push_views=False)
+        )
+    counts = _derby_counts(spark, url)
+    assert written[empty] == 0 and empty not in counts
+    assert counts == {t: n for t, n in written.items() if t != empty}
+    assert all(n > 0 for n in counts.values())
+
+
+def test_insert_data_to_tables_one_action_per_table(spark, api_server, derby_url):
+    """Three non-empty tables cost at most 4 jobs: one write each, whose
+    observed count is the written count, plus the transactions dedup's
+    shuffle stage; no persist, no separate count."""
+    from zylyty_data_engineer_challenge_spark.etl.clean import clean_transactions
+
+    frames = {
+        "accounts": fetch_csv(spark, api_server, "accounts", TOKEN, ACCOUNTS),
+        "clients": fetch_csv(spark, api_server, "clients", TOKEN, CLIENTS),
+        "transactions": clean_transactions(
+            read_transactions(spark, api_server, TOKEN, limit=PAGE_LIMIT, max_pages=10)
+        ),
+    }
+    url = derby_url.replace("testdb", "jobsdb")
+    sc = spark.sparkContext
+    sc.setJobGroup("insert-one-action", "insert_data_to_tables")
+    try:
+        written = jdbc_sink.insert_data_to_tables(frames, url)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert written == {"accounts": 3, "clients": 2, "transactions": N_TX_CLEAN}
+    assert len(sc.statusTracker().getJobIdsForGroup("insert-one-action")) <= 4
+    assert not any(df.is_cached for df in frames.values())
 
 
 def test_stream_to_jdbc_foreachbatch(spark, derby_url, tmp_path):
@@ -391,7 +606,6 @@ def test_pipeline_registers_engine_native_views(spark, api_server, derby_url):
         admin_api_key=TOKEN,
         jdbc_url=derby_url.replace("testdb", "viewdb"),
         push_views=False,
-        use_datasource=False,
     )
     run_pipeline(spark, cfg)
     v2 = spark.sql(
@@ -446,8 +660,7 @@ def test_page0_400_raises_after_bounded_retries(bad_request_server, monkeypatch)
 def test_past_end_400_is_end_of_data(bad_request_server):
     from zylyty_data_engineer_challenge_spark.sources.rest_pages import _fetch_page
 
-    assert _fetch_page(bad_request_server, TOKEN, 3, 100, timeout=2.0, max_retries=1) == []
-
-
-def test_pipeline_use_datasource_defaults_to_api_availability():
-    assert PipelineConfig().use_datasource is HAS_DATASOURCE_API
+    assert _fetch_page(bad_request_server, TOKEN, 3, 100, timeout=2.0, max_retries=1) == (
+        b"[]",
+        0,
+    )

@@ -12,9 +12,11 @@ reference's exact external contract:
 * configuration comes from the same seven env vars (main.py:12-21) — but
   unlike the reference (main.py:32-38), secrets are never printed.
 
-Differences by design: cleaning runs distributed (window dedup, not pandas
-row order); the REST ingest is a partitioned Python Data Source; JDBC
-writes are executor-parallel appends.
+Differences by design: the sources fetch on the driver and hand the JVM
+one Arrow frame each, so the pipeline starts no Python worker; cleaning
+runs in the JVM (``min_by`` dedup on the arrival ordinal, not pandas row
+order); each table is one executor-parallel JDBC append that also counts
+its rows.
 """
 
 from __future__ import annotations
@@ -28,11 +30,7 @@ from .etl.clean import clean_transactions
 from .schemas import ACCOUNTS, CLIENTS
 from .sinks import jdbc as jdbc_sink
 from .sources.http_csv import fetch_csv
-from .sources.rest_pages import (
-    HAS_DATASOURCE_API,
-    read_transactions,
-    read_transactions_fallback,
-)
+from .sources.rest_pages import read_transactions
 
 COMPLETION_FMT = "ZYLYTY Data Import Completed [{clients}, {accounts}, {transactions}]"
 
@@ -50,7 +48,6 @@ class PipelineConfig:
     db_name: str = field(default_factory=lambda: os.environ.get("DB_NAME", ""))
     jdbc_url: str | None = None  # overrides db_* when set (tests, non-PG targets)
     push_views: bool = True
-    use_datasource: bool = HAS_DATASOURCE_API  # partitioned REST source vs driver loop
 
     def url(self) -> str:
         if self.jdbc_url:
@@ -74,9 +71,8 @@ def ingest(spark: SparkSession, cfg: PipelineConfig) -> dict[str, DataFrame]:
     reference's non-RequestException path, SURVEY.md §8.4) propagates."""
     accounts = fetch_csv(spark, cfg.api_base_url, "accounts", cfg.admin_api_key, ACCOUNTS)
     clients = fetch_csv(spark, cfg.api_base_url, "clients", cfg.admin_api_key, CLIENTS)
-    reader = read_transactions if cfg.use_datasource else read_transactions_fallback
     transactions = clean_transactions(
-        reader(spark, cfg.api_base_url, cfg.admin_api_key)
+        read_transactions(spark, cfg.api_base_url, cfg.admin_api_key)
     )
     return {"accounts": accounts, "clients": clients, "transactions": transactions}
 

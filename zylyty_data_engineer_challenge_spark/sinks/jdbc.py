@@ -15,13 +15,17 @@ Reference semantics:
 Spark-first shape: ``df.write.jdbc`` with ``createTableColumnTypes``
 carrying the reference's exact DDL types (schemas.JDBC_COLUMN_TYPES);
 ``batchsize`` + ``numPartitions`` control executor-parallel inserts — at
-scale the write is N parallel connections, not a driver funnel. View DDL
-goes over a single JVM ``DriverManager`` connection (no rows flow).
+scale the write is N parallel connections, not a driver funnel. Each table
+is one write action whose row count is an ``Observation`` on that write;
+the K1 emptiness test reads the plan (a source with no rows returns an
+empty local relation), so it runs no job. View DDL goes over a single JVM
+``DriverManager`` connection (no rows flow).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import functions as F
 
 from ..schemas import JDBC_COLUMN_TYPES
 
@@ -83,30 +87,34 @@ def write_table(
     writer.write.mode(mode).options(**opts).jdbc(url, table, properties=properties or {})
 
 
+def _known_empty(df: DataFrame) -> bool:
+    """Whether the frame's optimized plan is an empty local relation, which
+    is what a source returns when it has no rows. Costs planning, no job."""
+    plan = df._jdf.queryExecution().optimizedPlan()
+    return plan.nodeName() == "LocalRelation" and plan.data().isEmpty()
+
+
 def insert_data_to_tables(
     frames: dict[str, DataFrame],
     url: str,
     properties: dict[str, str] | None = None,
 ) -> dict[str, int]:
-    """K1: load each non-empty frame; empty frames are skipped silently
-    (main.py:131-136). Returns per-table written row counts.
+    """K1: load each non-empty frame; a frame the driver knows is empty is
+    skipped and creates no table (main.py:131-136). Returns per-table
+    written row counts, 0 for a skipped table.
 
-    Each frame is persisted across the count + write actions — the
-    transactions lineage is the full paginated API fetch, which must not
-    execute twice (and the reported count must equal the rows written).
+    Each table is one action: the count is observed on the write itself,
+    so the frame's lineage runs once and the count equals the rows written.
     """
     written: dict[str, int] = {}
     for table, df in frames.items():
-        df.persist()
-        try:
-            n = df.count()
-            if n == 0:
-                written[table] = 0
-                continue
-            write_table(df, url, table, properties=properties)
-            written[table] = n
-        finally:
-            df.unpersist()
+        if _known_empty(df):
+            written[table] = 0
+            continue
+        obs = Observation()
+        write_table(df.observe(obs, F.count(F.lit(1)).alias("rows")), url, table,
+                    properties=properties)
+        written[table] = obs.get["rows"]
     return written
 
 

@@ -27,6 +27,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 try:
     import requests
@@ -36,8 +37,10 @@ except ImportError:  # pragma: no cover - requests is stdlib-adjacent here
 DEFAULT_TIMEOUT = 10.0  # main.py:66
 
 
-def _empty(spark: SparkSession, schema: T.StructType) -> DataFrame:
-    return spark.createDataFrame([], schema)
+def empty_frame(spark: SparkSession, schema: T.StructType) -> DataFrame:
+    """An empty frame whose plan is an empty local relation: the sink sees
+    it is empty on the driver and skips it without a job (K1)."""
+    return spark.createDataFrame(to_arrow_schema(schema).empty_table(), schema)
 
 
 def fetch_csv(
@@ -54,7 +57,7 @@ def fetch_csv(
     mirroring the reference's silent-failure ethos (main.py:71-73).
     """
     if requests is None:
-        return _empty(spark, schema)
+        return empty_frame(spark, schema)
     try:
         resp = requests.get(
             f"{base_url}/download/{name}.csv",
@@ -64,17 +67,19 @@ def fetch_csv(
         resp.raise_for_status()
         body = resp.content
     except Exception:
-        return _empty(spark, schema)
+        return empty_frame(spark, schema)
 
     try:
         reader = csv.DictReader(io.StringIO(body.decode("utf-8")))
         names = [f.name for f in schema.fields]
         raw_schema = T.StructType([T.StructField(n, T.StringType(), True) for n in names])
         rows = [tuple(rec.get(n) for n in names) for rec in reader]
+        if not rows:
+            return empty_frame(spark, schema)
         raw = spark.createDataFrame(pd.DataFrame(rows, columns=names, dtype=object), raw_schema)
         # JVM-side casts to the declared types (PERMISSIVE: bad cells -> NULL)
         return raw.select(
             *[F.col(f.name).cast(f.dataType).alias(f.name) for f in schema.fields]
         )
     except Exception:
-        return _empty(spark, schema)
+        return empty_frame(spark, schema)
